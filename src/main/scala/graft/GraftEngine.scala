@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.analytics.Analytics
 import graft.api.{Formatters, LogQuery, RefResolver}
 import graft.exec.Runner
-import graft.parse.LogSource
 import graft.plans.ParseLog
 import graft.store.{BlobStore, EventStore, Maintenance}
 import graft.views.Views
@@ -99,8 +98,6 @@ final class GraftEngine private (val spark: SparkSession, val root: String) {
     graft.analytics.Lines.searchLines(spark, body, pattern, ctx)
   }
   def sql(q: String): DataFrame = { install(); spark.sql(q) }
-  def parseFiles(glob: String, format: String = "auto"): DataFrame =
-    LogSource.readLogFiles(spark, glob, format)
 
   /** Render helpers (S12). */
   def show(df: DataFrame, limit: Int = 20): String = Formatters.table(df, limit)

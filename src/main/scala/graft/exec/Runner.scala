@@ -6,6 +6,7 @@ import java.sql.{Date, Timestamp}
 import java.util.UUID
 import java.util.concurrent.TimeUnit
 import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.BlqFunctions
 import graft.model._
@@ -102,47 +103,25 @@ final class Runner(store: EventStore, blobs: BlobStore,
       if (Files.exists(live)) new String(Files.readAllBytes(live), StandardCharsets.UTF_8)
       else ""
 
-    // Phase 2: outcome + mirrored invocation + events + output blob.
+    // Phase 2: outcome, then the run commit.
     store.appendOutcomes(Seq(Outcome(
       attempt_id = attemptId, completed_at = completed,
       duration_ms = Some(durationMs), exit_code = Some(exit), signal = None,
       timeout = timedOut, date = dateOf(completed))))
 
-    val serial = store.nextRunSerial()
-    val inv = Invocation(
-      id = attemptId, run_serial = serial, session_id = sessionId,
-      source_name = sourceName, source_type = SourceType.Exec, tag = tag,
-      command = Some(cmdLine), cwd = cwd, executable_path = command.headOption,
-      started_at = started, duration_ms = Some(durationMs),
-      exit_code = Some(exit), hostname = Some(hostname),
-      platform = Some(sys.props.getOrElse("os.name", "unknown")),
-      arch = Some(sys.props.getOrElse("os.arch", "unknown")),
-      git_commit = ctx.git.commit, git_branch = ctx.git.branch,
-      git_dirty = ctx.git.dirty,
-      environment = ctx.environment, ci = ctx.ci, metadata = None,
-      date = dateOf(started))
-
     val hint =
       if (formatHint != "auto") formatHint
       else FormatRegistry.detectFormatFromCommand(cmdLine)
     val parsed = FormatRegistry.parse(output, hint)
-    // Same commit order as the import paths: events and output land
-    // BEFORE the invocation row, so a crash mid-write leaves dangling
-    // (joined-away) events, never a committed run claiming zero events.
-    // The attempt/outcome lifecycle rows above are unaffected — status-
-    // from-absence semantics come from those, not from invocations.
-    writeEvents(attemptId, started, parsed)
-    writeOutput(attemptId, started, output)
-    store.appendRun(inv, Seq.empty)
-
-    val errors = parsed.count(_.severity == Severity.Error).toLong
-    val warnings = parsed.count(_.severity == Severity.Warning).toLong
-    val status =
-      if (timedOut) "TIMEOUT"
-      else if (exit != 0 || errors > 0) "FAIL"
-      else if (warnings > 0) "WARN"
-      else "OK"
-    RunResult(attemptId, serial, exit, timedOut, status, errors, warnings, durationMs)
+    val inv = invocation(attemptId, started, ctx, sourceName,
+      SourceType.Exec, tag, Some(cmdLine)).copy(
+      cwd = cwd, executable_path = command.headOption,
+      duration_ms = Some(durationMs), exit_code = Some(exit),
+      hostname = Some(hostname),
+      platform = Some(sys.props.getOrElse("os.name", "unknown")),
+      arch = Some(sys.props.getOrElse("os.arch", "unknown")))
+    commit(inv, eventFrame(attemptId, started, parsed), tally(parsed),
+      Some(output), durationMs, timedOut)
   }
 
   /** Import existing content as a completed run without a subprocess
@@ -153,32 +132,10 @@ final class Runner(store: EventStore, blobs: BlobStore,
       context: Option[ExecContext.Captured] = None): RunResult = {
     val id = UUID.randomUUID().toString
     val started = now()
-    val ctx = contextFor(None, context)
     val parsed = FormatRegistry.parse(content, format)
-    val serial = store.nextRunSerial()
-    val errors = parsed.count(_.severity == Severity.Error).toLong
-    val warnings = parsed.count(_.severity == Severity.Warning).toLong
-    // Events and output land BEFORE the invocation row: a crash
-    // mid-import leaves dangling (joined-away) event rows, never a
-    // committed run that claims zero events. The synthetic exit code
-    // mirrors the tally-derived status instead of an unconditional 0.
-    writeEvents(id, started, parsed)
-    writeOutput(id, started, content)
-    store.appendRun(Invocation(
-      id = id, run_serial = serial, session_id = sessionId,
-      source_name = sourceName, source_type = sourceType, tag = tag,
-      command = None, cwd = None, executable_path = None,
-      started_at = started, duration_ms = None,
-      exit_code = Some(if (errors > 0) 1 else 0),
-      hostname = None, platform = None, arch = None,
-      git_commit = ctx.git.commit, git_branch = ctx.git.branch,
-      git_dirty = ctx.git.dirty,
-      environment = ctx.environment, ci = ctx.ci, metadata = None,
-      date = dateOf(started)), Seq.empty)
-    val status =
-      if (errors > 0) "FAIL" else if (warnings > 0) "WARN" else "OK"
-    RunResult(id, serial, if (errors > 0) 1 else 0, timedOut = false,
-      status, errors, warnings, 0L)
+    commit(invocation(id, started, contextFor(None, context), sourceName,
+        sourceType, tag, command = None),
+      eventFrame(id, started, parsed), tally(parsed), Some(content), 0L)
   }
 
   /** Distributed bulk ingest (S4 at scale): a directory/glob of log
@@ -197,8 +154,6 @@ final class Runner(store: EventStore, blobs: BlobStore,
       context: Option[ExecContext.Captured] = None): RunResult = {
     val id = UUID.randomUUID().toString
     val started = now()
-    val ctx = contextFor(None, context)
-    val serial = store.nextRunSerial()
     val parsed = graft.parse.LogSource.readLogFiles(store.spark, pathGlob, format)
       .withColumn("id", expr("uuid()"))
       .withColumn("invocation_id", lit(id))
@@ -208,56 +163,84 @@ final class Runner(store: EventStore, blobs: BlobStore,
       .withColumn("date", lit(dateOf(started)))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      // Same commit order as importContent: events first, invocation
-      // row last — a crash mid-ingest leaves dangling events, never a
-      // committed run row claiming a clean zero-event import.
-      store.appendEvents(parsed)
       val tallies = parsed.agg(
         count(when(col("severity") === Severity.Error, 1)).as("e"),
         count(when(col("severity") === Severity.Warning, 1)).as("w"))
         .head()
-      val (errors, warnings) = (tallies.getLong(0), tallies.getLong(1))
-      store.appendRun(Invocation(
-        id = id, run_serial = serial, session_id = sessionId,
-        source_name = Some(pathGlob), source_type = SourceType.Import, tag = tag,
-        command = Some(s"import $pathGlob"), cwd = None, executable_path = None,
-        started_at = started, duration_ms = None,
-        exit_code = Some(if (errors > 0) 1 else 0),
-        hostname = None, platform = None, arch = None,
-        git_commit = ctx.git.commit, git_branch = ctx.git.branch,
-        git_dirty = ctx.git.dirty,
-        environment = ctx.environment, ci = ctx.ci, metadata = None,
-        date = dateOf(started)), Seq.empty)
-      val status =
-        if (errors > 0) "FAIL" else if (warnings > 0) "WARN" else "OK"
-      RunResult(id, serial, if (errors > 0) 1 else 0, timedOut = false,
-        status, errors, warnings,
+      commit(invocation(id, started, contextFor(None, context), Some(pathGlob),
+          SourceType.Import, tag, Some(s"import $pathGlob")),
+        Some(parsed), (tallies.getLong(0), tallies.getLong(1)), output = None,
         System.currentTimeMillis() - started.getTime)
     } finally parsed.unpersist()
   }
 
-  /** Store captured output: blob/inline via the content-addressed
-    * store + the metadata row in the outputs table (the join target
-    * for blob orphan reconciliation, J7). */
-  private def writeOutput(invocationId: String, started: Timestamp,
-      content: String): Unit = {
+  /** A run's invocation row, minus what only a subprocess knows (cwd,
+    * executable, duration, exit code, host) and the run serial, which
+    * [[commit]] assigns. */
+  private def invocation(id: String, started: Timestamp,
+      ctx: ExecContext.Captured, sourceName: Option[String],
+      sourceType: String, tag: Option[String],
+      command: Option[String]): Invocation =
+    Invocation(
+      id = id, run_serial = 0L, session_id = sessionId,
+      source_name = sourceName, source_type = sourceType, tag = tag,
+      command = command, cwd = None, executable_path = None,
+      started_at = started, duration_ms = None, exit_code = None,
+      hostname = None, platform = None, arch = None,
+      git_commit = ctx.git.commit, git_branch = ctx.git.branch,
+      git_dirty = ctx.git.dirty,
+      environment = ctx.environment, ci = ctx.ci, metadata = None,
+      date = dateOf(started))
+
+  /** The one run-commit step: assign the serial, store the captured
+    * output's body in the blob store, commit events + output row +
+    * invocation through [[EventStore.commitRun]], and derive the run's
+    * status from its exit code and (errors, warnings) tally. An import
+    * has no exit code; it gets a synthetic one mirroring the tally.
+    * `durationMs` is read after the commit (a bulk import reports its
+    * wall time including the write). */
+  private def commit(inv: Invocation, events: Option[DataFrame],
+      tally: (Long, Long), output: Option[String], durationMs: => Long,
+      timedOut: Boolean = false): RunResult = {
+    val (errors, warnings) = tally
+    val exit = inv.exit_code.getOrElse(if (errors > 0) 1 else 0)
+    val serial = store.nextRunSerial()
+    store.commitRun(inv.copy(run_serial = serial, exit_code = Some(exit)),
+      events, output.map(outputRow(inv.id, inv.started_at, _)).toSeq)
+    val status =
+      if (timedOut) "TIMEOUT"
+      else if (exit != 0 || errors > 0) "FAIL"
+      else if (warnings > 0) "WARN"
+      else "OK"
+    RunResult(inv.id, serial, exit, timedOut, status, errors, warnings, durationMs)
+  }
+
+  private def tally(parsed: Seq[graft.parse.ParsedEvent]): (Long, Long) =
+    (parsed.count(_.severity == Severity.Error).toLong,
+      parsed.count(_.severity == Severity.Warning).toLong)
+
+  /** Captured output: the body goes to the content-addressed blob
+    * store (or inline); the returned metadata row is the outputs-table
+    * join target for blob orphan reconciliation (J7). */
+  private def outputRow(invocationId: String, started: Timestamp,
+      content: String): Output = {
     val bytes = content.getBytes(StandardCharsets.UTF_8)
     val (storageType, storageRef, hash) = blobs.store(bytes)
-    store.appendOutputs(Seq(graft.model.Output(
+    Output(
       id = UUID.randomUUID().toString, invocation_id = invocationId,
       stream = "combined", content_hash = Some(hash),
       byte_length = bytes.length.toLong, storage_type = storageType,
       storage_ref = storageRef, content_type = Some("text/plain"),
-      date = dateOf(started))))
+      date = dateOf(started))
   }
 
-  /** Shared phase-2 event write: parsed events → fingerprinted rows. */
-  private def writeEvents(invocationId: String, started: Timestamp,
-      parsed: Seq[graft.parse.ParsedEvent]): Unit =
-    if (parsed.nonEmpty) {
+  /** Parsed events → fingerprinted event rows; None when nothing parsed. */
+  private def eventFrame(invocationId: String, started: Timestamp,
+      parsed: Seq[graft.parse.ParsedEvent]): Option[DataFrame] =
+    Option.when(parsed.nonEmpty) {
       val spark = store.spark
       import spark.implicits._
-      val df = parsed.toDS().toDF()
+      parsed.toDS().toDF()
         .withColumn("id", expr("uuid()"))
         .withColumn("invocation_id", lit(invocationId))
         .withColumn("timestamp", lit(started))
@@ -268,6 +251,5 @@ final class Runner(store: EventStore, blobs: BlobStore,
         .withColumn("context", lit(null).cast("string"))
         .withColumn("metadata", lit(null).cast("string"))
         .withColumn("date", lit(dateOf(started)))
-      store.appendEvents(df)
     }
 }

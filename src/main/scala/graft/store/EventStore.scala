@@ -71,36 +71,29 @@ class EventStore(val spark: SparkSession, val root: String) {
       .option("compression", "zstd")
       .partitionBy(cols: _*)
 
-  // Registered temp views (Views.registerAll) hold LogicalRelations
-  // whose InMemoryFileIndex snapshots the file listing at creation —
-  // refreshByPath only refreshes CACHED datasets, so without active
-  // re-registration, rows appended AFTER registration are invisible
-  // through spark.sql() while the Scala facade (fresh reads per call)
-  // sees them. Views.registerAll installs itself here; every append
-  // re-registers with fresh listings.
+  // Post-append refresh (Views.registerAll installs one): re-registers
+  // the SQL views with fresh file listings after every store write.
   @volatile private var refreshHook: () => Unit = () => ()
 
   /** Install the post-append refresh (single slot, idempotent to
     * re-registration). */
   def onAppendRefresh(f: () => Unit): Unit = refreshHook = f
 
-  private def refreshed(table: String): Unit = {
-    try spark.catalog.refreshByPath(path(table))
-    catch { case scala.util.control.NonFatal(_) => }
+  private def refreshed(tables: String*): Unit = {
+    for (t <- tables)
+      try spark.catalog.refreshByPath(path(t))
+      catch { case scala.util.control.NonFatal(_) => }
     refreshHook()
   }
 
   /** Invalidate every table's file listing AND re-register views —
     * for DELETE-shaped maintenance (prune/clean): refreshByPath alone
     * only refreshes cached datasets, while registered temp views keep
-    * their snapshot listings (see the refreshHook note above) and
-    * would plan against deleted part files. */
+    * their snapshot listings and would plan against deleted part
+    * files. */
   def refreshAllViews(): Unit = {
-    for (t <- Seq("attempts", "outcomes", "invocations", "events", "outputs"))
-      try spark.catalog.refreshByPath(path(t))
-      catch { case scala.util.control.NonFatal(_) => }
     invDates.clear()
-    refreshHook()
+    refreshed("attempts", "outcomes", "invocations", "events", "outputs")
   }
 
   // ---- write path (S9/S10) -------------------------------------------
@@ -115,11 +108,6 @@ class EventStore(val spark: SparkSession, val root: String) {
     refreshed("outcomes")
   }
 
-  def appendOutputs(outputs: Seq[Output]): Unit = {
-    writer(outputs.toDS(), Seq("date")).parquet(path("outputs"))
-    refreshed("outputs")
-  }
-
   /** Write-side clustering for event files: sorted by (date, severity,
     * timestamp) within each task partition. The date prefix lets
     * FileFormatWriter skip its own partition-column sort; the
@@ -128,35 +116,46 @@ class EventStore(val spark: SparkSession, val root: String) {
     * two most-filtered columns (P6 severity IN-lists, P9 recency), so
     * a `severity = 'error'` scan skips clean row groups outright
     * instead of decoding them. A local per-partition sort: no shuffle,
-    * negligible against parse+write cost at any batch size. */
-  private def clusteredEvents(ds: Dataset[Event]): Dataset[Event] =
-    ds.sortWithinPartitions(col("date"), col("severity"), col("timestamp"))
-
-  /** Write one completed run: its parsed events, THEN its invocation
-    * row — the same crash-consistency order as every Runner write path
-    * (a crash mid-write leaves dangling, joined-away events, never a
-    * committed run row claiming zero events). Caller assigns
-    * run_serial via [[nextRunSerial]]. */
-  def appendRun(inv: Invocation, events: Seq[Event]): Unit = {
-    if (events.nonEmpty)
-      writer(clusteredEvents(events.toDS()), Seq("date")).parquet(path("events"))
-    writer(Seq(inv).toDS(), Seq("date")).parquet(path("invocations"))
-    refreshed("invocations"); refreshed("events")
-    invDates.put(inv.id, inv.date.toString)
-  }
-
-  /** Bulk event append for already-built DataFrames (import path).
-    * Input is aligned to the canonical Event schema — missing columns
-    * become typed nulls, present ones are cast — so an ad-hoc frame
-    * (e.g. a VOID-typed null literal) can never poison the store's
-    * parquet schema. */
-  def appendEvents(df: DataFrame): Unit = {
+    * negligible against parse+write cost at any batch size.
+    *
+    * Input is aligned to the canonical Event schema first — missing
+    * columns become typed nulls, present ones are cast — so an ad-hoc
+    * frame (e.g. a VOID-typed null literal) can never poison the
+    * store's parquet schema. */
+  private def writeEvents(df: DataFrame): Unit = {
     val schema = implicitly[org.apache.spark.sql.Encoder[Event]].schema
     val aligned = df.select(schema.fields.map { f =>
       if (df.columns.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
       else lit(null).cast(f.dataType).as(f.name)
     }.toSeq: _*)
-    writer(clusteredEvents(aligned.as[Event]), Seq("date")).parquet(path("events"))
+    writer(aligned.as[Event]
+      .sortWithinPartitions(col("date"), col("severity"), col("timestamp")),
+      Seq("date")).parquet(path("events"))
+  }
+
+  /** Commit one completed run — the store's single run-commit path.
+    * Writes the run's events, then its output rows, then its
+    * invocation row LAST: a crash mid-commit leaves dangling,
+    * joined-away events, never a committed run row claiming zero
+    * events. One refresh follows the commit: the tables' cached file
+    * listings, then the post-append hook, once per run — a registered
+    * view's listing is a snapshot, so the hook's re-registration is
+    * what lets raw `spark.sql` see the new rows.
+    * Caller assigns run_serial via [[nextRunSerial]]. */
+  def commitRun(inv: Invocation, events: Option[DataFrame] = None,
+      outputs: Seq[Output] = Nil): Unit = {
+    events.foreach(writeEvents)
+    if (outputs.nonEmpty)
+      writer(outputs.toDS(), Seq("date")).parquet(path("outputs"))
+    writer(Seq(inv).toDS(), Seq("date")).parquet(path("invocations"))
+    invDates.put(inv.id, inv.date.toString)
+    refreshed("events", "outputs", "invocations")
+  }
+
+  /** Standalone event append for frames outside a run commit (the live
+    * stream's micro-batches), with its own refresh. */
+  def appendEvents(df: DataFrame): Unit = {
+    writeEvents(df)
     refreshed("events")
   }
 
@@ -191,12 +190,6 @@ class EventStore(val spark: SparkSession, val root: String) {
     if (exists("events")) read("events") else emptyDs[Event]
   def outputs: DataFrame =
     if (exists("outputs")) read("outputs") else emptyDs[Output]
-
-  /** Typed views (SURVEY §1.3: Dataset[T] where type safety helps). */
-  def eventsTyped: Dataset[Event] = events.as[Event]
-  def invocationsTyped: Dataset[Invocation] = invocations.as[Invocation]
-  def attemptsTyped: Dataset[Attempt] = attempts.as[Attempt]
-  def outcomesTyped: Dataset[Outcome] = outcomes.as[Outcome]
 
   /** Streaming view of the events table: each appended run's parquet
     * files surface as new micro-batch rows — the bridge from the

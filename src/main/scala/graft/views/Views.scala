@@ -49,15 +49,17 @@ object Views {
     * counts + filtered counts + distinct-fingerprint counts per run.
     * Map-side partial agg on invocation_id; at 100 TB swap
     * countDistinct → approx_count_distinct (A2 scale note). */
-  def runs(store: EventStore): DataFrame = {
-    val perRun = store.events.groupBy(col("invocation_id")).agg(
+  def runs(store: EventStore): DataFrame = runs(store.events, store.invocations)
+
+  private def runs(events: DataFrame, invocations: DataFrame): DataFrame = {
+    val perRun = events.groupBy(col("invocation_id")).agg(
       count(lit(1)).as("event_count"),
       count(when(col("severity") === "error", 1)).as("errors"),
       count(when(col("severity") === "warning", 1)).as("warnings"),
       countDistinct(when(col("severity") === "error", col("fingerprint"))).as("unique_errors"),
       min(col("timestamp")).as("first_event_at"),
       max(col("timestamp")).as("last_event_at"))
-    store.invocations.withColumnRenamed("id", "invocation_id")
+    invocations.withColumnRenamed("id", "invocation_id")
       .join(perRun, Seq("invocation_id"), "left")
       .withColumn("event_count", coalesce(col("event_count"), lit(0L)))
       .withColumn("errors", coalesce(col("errors"), lit(0L)))
@@ -70,10 +72,12 @@ object Views {
   /** Attempt lifecycle status (J2; bird_schema.sql:371-406): LEFT join
     * outcomes, status from null-ness — pending (no outcome), orphaned
     * (outcome with NULL exit), timeout, ok, failed. */
-  def attemptStatus(store: EventStore): DataFrame = {
-    val a = store.attempts
-    val o = store.outcomes.withColumnRenamed("date", "outcome_date")
-    a.join(o, a("id") === o("attempt_id"), "left")
+  def attemptStatus(store: EventStore): DataFrame =
+    attemptStatus(store.attempts, store.outcomes)
+
+  private def attemptStatus(attempts: DataFrame, outcomes: DataFrame): DataFrame = {
+    val o = outcomes.withColumnRenamed("date", "outcome_date")
+    attempts.join(o, attempts("id") === o("attempt_id"), "left")
       .withColumn("status",
         when(col("attempt_id").isNull, "pending")
           .when(col("timeout") === true, "timeout")
@@ -85,16 +89,19 @@ object Views {
 
   /** Status board (U1+W2; bird_schema.sql:518-574): latest completed run
     * per source UNION pending attempts. */
-  def sourceStatus(store: EventStore): DataFrame = {
+  def sourceStatus(store: EventStore): DataFrame =
+    sourceStatus(runs(store), attemptStatus(store))
+
+  private def sourceStatus(runsDf: DataFrame, statusDf: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("source_name"))
       .orderBy(col("started_at").desc, col("invocation_id").desc)
-    val latest = runs(store)
+    val latest = runsDf
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
       .select(col("source_name"), col("source_type"),
         col("started_at"), col("status_badge").as("status"),
         col("errors"), col("warnings"))
-    val pending = attemptStatus(store)
+    val pending = statusDf
       .filter(col("status") === "pending")
       .select(col("source_name"), col("source_type"),
         col("timestamp").as("started_at"), lit("[....]").as("status"),
@@ -108,26 +115,30 @@ object Views {
     store.events.filter(col("date") >= date_sub(current_date(), days))
 
   /** Register every relation as a temp view so spark.sql() works like
-    * the reference's macro surface (§3.2). Registration re-runs after
-    * every store append (via the store's refresh hook): a temp view's
-    * file listing is a snapshot, so without re-registration the SQL
-    * surface would silently serve pre-append data while the Scala
-    * facade (fresh reads) serves current data. */
+    * the reference's macro surface (§3.2), and install the
+    * re-registration as the store's post-append refresh (the contract
+    * is on [[EventStore.commitRun]]). */
   def registerAll(store: EventStore): Unit = {
     store.onAppendRefresh(() => registerViews(store))
     registerViews(store)
   }
 
+  /** Each table is read ONCE (a read is a schema-merge job) and the
+    * four `blq_*` views are derived from those frames. */
   private def registerViews(store: EventStore): Unit = {
-    val s = store.spark
-    store.events.createOrReplaceTempView("events_raw")
-    store.invocations.createOrReplaceTempView("invocations")
-    store.attempts.createOrReplaceTempView("attempts")
-    store.outcomes.createOrReplaceTempView("outcomes")
+    val (events, invocations) = (store.events, store.invocations)
+    val (attempts, outcomes) = (store.attempts, store.outcomes)
+    val runsDf = runs(events, invocations)
+    val statusDf = attemptStatus(attempts, outcomes)
+    events.createOrReplaceTempView("events_raw")
+    invocations.createOrReplaceTempView("invocations")
+    attempts.createOrReplaceTempView("attempts")
+    outcomes.createOrReplaceTempView("outcomes")
     store.outputs.createOrReplaceTempView("outputs")
-    eventsFlat(store).createOrReplaceTempView("blq_events")
-    runs(store).createOrReplaceTempView("blq_runs")
-    attemptStatus(store).createOrReplaceTempView("blq_attempt_status")
-    sourceStatus(store).createOrReplaceTempView("blq_source_status")
+    flatJoin(events, invocations, hintBroadcast = true)
+      .createOrReplaceTempView("blq_events")
+    runsDf.createOrReplaceTempView("blq_runs")
+    statusDf.createOrReplaceTempView("blq_attempt_status")
+    sourceStatus(runsDf, statusDf).createOrReplaceTempView("blq_source_status")
   }
 }

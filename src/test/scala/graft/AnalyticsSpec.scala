@@ -16,22 +16,22 @@ class AnalyticsSpec extends SparkSpec {
   private lazy val store: EventStore = {
     val root = Files.createTempDirectory("analytics_store").toString
     val s = new EventStore(spark, root)
-    s.appendRun(inv("i1", 1L, Some("build"), "2026-08-01 10:00:00", Some(1)),
-      Seq(
+    s.commitRun(inv("i1", 1L, Some("build"), "2026-08-01 10:00:00", Some(1)),
+      Some(spark.createDataFrame(Seq(
         ev("e1", "i1", 0, "error", "undefined variable spam",
           file = Some("a.c"), line = Some(10), fp = Some("fp_spam")),
         ev("e2", "i1", 1, "error", "missing include guard",
           file = Some("a.c"), line = Some(2), fp = Some("fp_guard")),
         ev("e3", "i1", 2, "warning", "unused parameter x",
-          file = Some("b.c"), line = Some(5), fp = Some("fp_unused"))))
-    s.appendRun(inv("i2", 2L, Some("build"), "2026-08-01 11:00:00", Some(1)),
-      Seq(
+          file = Some("b.c"), line = Some(5), fp = Some("fp_unused"))))))
+    s.commitRun(inv("i2", 2L, Some("build"), "2026-08-01 11:00:00", Some(1)),
+      Some(spark.createDataFrame(Seq(
         ev("e4", "i2", 0, "error", "undefined variable spam",
           file = Some("a.c"), line = Some(10), fp = Some("fp_spam")),
         ev("e5", "i2", 1, "error", "new null deref",
           file = Some("c.c"), line = Some(7), fp = Some("fp_null")),
         ev("e6", "i2", 2, "error", "double free of ptr",
-          file = Some("a.c"), line = Some(30), fp = Some("fp_free"))))
+          file = Some("a.c"), line = Some(30), fp = Some("fp_free"))))))
     s
   }
 
@@ -118,8 +118,9 @@ class AnalyticsSpec extends SparkSpec {
           fp = Some("fp_flaky"))
       evs += ev(s"st$serial", s"r$serial", 1, "error", "steady boom",
         fp = Some("fp_steady"))
-      s.appendRun(inv(s"r$serial", serial, Some("build"),
-        s"2026-08-01 0$serial:00:00", Some(1)), evs.result())
+      s.commitRun(inv(s"r$serial", serial, Some("build"),
+        s"2026-08-01 0$serial:00:00", Some(1)),
+        Some(spark.createDataFrame(evs.result())))
     }
     val h = new Analytics(s).fingerprintHistory().collect()
       .map(r => r.getAs[String]("fingerprint") ->

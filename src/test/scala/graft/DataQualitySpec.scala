@@ -130,27 +130,6 @@ class DataQualitySpec extends SparkSpec {
   }
 
   test("row-local fusion: a 6-rule suite costs exactly as many jobs as a 1-rule suite") {
-    val sc = spark.sparkContext
-    def jobsFor(body: => Unit): Int = {
-      val counted = new java.util.concurrent.atomic.AtomicInteger(0)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          counted.incrementAndGet(); ()
-        }
-      }
-      sc.addSparkListener(listener)
-      try {
-        body
-        // listener bus is async: poll until the count is stable
-        var last = -1
-        var spins = 0
-        while (counted.get() != last && spins < 40) {
-          last = counted.get(); Thread.sleep(50); spins += 1
-        }
-      } finally sc.removeSparkListener(listener)
-      counted.get()
-    }
     val one = jobsFor {
       DataQuality.check(rows, Seq(NotNull("name"))).collect(); ()
     }

@@ -39,9 +39,9 @@ object Drive extends App {
     lit(null.asInstanceOf[String]).as("context"),
     lit(null.asInstanceOf[String]).as("metadata"),
     lit(java.sql.Date.valueOf("2026-08-03")).as("date"))
-  store.appendRun(inv, Seq.empty)
-  store.appendEvents(events)
-  Views.registerAll(store)
+  // One commit: events, then the invocation row; the views registered
+  // above refresh themselves once the run is committed.
+  store.commitRun(inv, Some(events))
   spark.sql("SELECT ref, location, message FROM blq_events WHERE severity='error' AND tool_name='gcc' ORDER BY event_index LIMIT 10").show(false)
 
   // Fluent API + CLI filter mini-language surface.

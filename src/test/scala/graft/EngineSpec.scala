@@ -40,25 +40,24 @@ object Fixtures {
   /** Two runs with overlapping fingerprints (diff scenario, FIXTURES.md §4)
     * + a pending attempt. */
   def populate(store: EventStore): Unit = {
-    store.appendRun(
+    store.commitRun(
       inv("i1", 1L, Some("build"), "2026-08-01 10:00:00", Some(1)),
-      Seq(
+      Some(store.spark.createDataFrame(Seq(
         ev("e1", "i1", 0, Severity.Error, "undefined reference to `foo`",
           Some("src/main.c"), Some(15), Some("gcc_compile_f1")),
         ev("e2", "i1", 1, Severity.Error, "expected ';' before '}'",
           Some("src/util.c"), Some(3), Some("gcc_compile_f2")),
         ev("e3", "i1", 2, Severity.Warning, "unused variable 'x'",
-          Some("src/main.c"), Some(20), Some("gcc_compile_f3"))))
-    store.appendRun(
+          Some("src/main.c"), Some(20), Some("gcc_compile_f3"))))))
+    store.commitRun(
       inv("i2", 2L, Some("build"), "2026-08-02 11:00:00", Some(1), date = d2),
-      Seq(
+      Some(store.spark.createDataFrame(Seq(
         ev("e4", "i2", 0, Severity.Error, "expected ';' before '}'",
           Some("src/util.c"), Some(3), Some("gcc_compile_f2"), date = d2),
         ev("e5", "i2", 1, Severity.Error, "implicit declaration of `bar`",
-          Some("src/new.c"), Some(7), Some("gcc_compile_f4"), date = d2)))
-    store.appendRun(
-      inv("i3", 3L, None, "2026-08-02 12:00:00", Some(0), source = "test", date = d2),
-      Seq.empty)
+          Some("src/new.c"), Some(7), Some("gcc_compile_f4"), date = d2)))))
+    store.commitRun(
+      inv("i3", 3L, None, "2026-08-02 12:00:00", Some(0), source = "test", date = d2))
     store.appendAttempts(Seq(
       Attempt("a1", "sess1", ts("2026-08-01 10:00:00"), Some("/proj"),
         Some("make all"), Some("/usr/bin/make"), Some(100), None,
@@ -184,14 +183,37 @@ class EngineSpec extends SparkSpec {
     // while the Scala facade saw them
     val root = java.nio.file.Files.createTempDirectory("fresh_store").toString
     val s2 = new graft.store.EventStore(spark, root)
-    s2.appendRun(Fixtures.inv("fa", 1L, Some("t"), "2026-08-01 10:00:00", Some(0)),
-      Seq(Fixtures.ev("fe1", "fa", 0, "error", "one")))
+    s2.commitRun(Fixtures.inv("fa", 1L, Some("t"), "2026-08-01 10:00:00", Some(0)),
+      Some(spark.createDataFrame(Seq(Fixtures.ev("fe1", "fa", 0, "error", "one")))))
     Views.registerAll(s2)
     assert(spark.sql("SELECT count(*) FROM events_raw").head().getLong(0) === 1L)
-    s2.appendRun(Fixtures.inv("fb", 2L, Some("t"), "2026-08-01 11:00:00", Some(1)),
-      Seq(Fixtures.ev("fe2", "fb", 0, "error", "two"),
-        Fixtures.ev("fe3", "fb", 1, "warning", "three")))
+    s2.commitRun(Fixtures.inv("fb", 2L, Some("t"), "2026-08-01 11:00:00", Some(1)),
+      Some(spark.createDataFrame(Seq(Fixtures.ev("fe2", "fb", 0, "error", "two"),
+        Fixtures.ev("fe3", "fb", 1, "warning", "three")))))
     assert(spark.sql("SELECT count(*) FROM events_raw").head().getLong(0) === 3L)
     assert(spark.sql("SELECT count(*) FROM blq_events").head().getLong(0) === 3L)
+    // a Runner commit (events + output row + invocation, one refresh)
+    // reaches the derived and output views too, not only the event ones
+    val r = new graft.exec.Runner(s2, new graft.store.BlobStore(s"$root/blobs"))
+      .importContent("src/x.c:1:1: error: four\n", format = "gcc_text")
+    def one(q: String): Long = spark.sql(q).head().getLong(0)
+    assert(one("SELECT count(*) FROM blq_runs") === 3L)
+    assert(one(s"SELECT errors FROM blq_runs WHERE invocation_id = '${r.invocationId}'") === 1L)
+    assert(one(s"SELECT count(*) FROM outputs WHERE invocation_id = '${r.invocationId}'") === 1L)
+    assert(one("SELECT count(*) FROM events_raw") === 4L)
+  }
+
+  test("sql surface: registration reads each table once") {
+    val root = Files.createTempDirectory("reg_store").toString
+    val s = new EventStore(spark, root)
+    Fixtures.populate(s)
+    new graft.exec.Runner(s, new graft.store.BlobStore(s"$root/blobs"))
+      .importContent("captured output\n")
+    for (t <- Seq("events", "invocations", "attempts", "outcomes", "outputs"))
+      assert(new java.io.File(s"$root/$t").isDirectory, s"$t missing")
+    // one schema-merge read (one job) per table; the blq_* views are
+    // derived from those frames, not re-read
+    val jobs = jobsFor(Views.registerAll(s))
+    assert(jobs <= 5, s"view registration ran $jobs jobs")
   }
 }

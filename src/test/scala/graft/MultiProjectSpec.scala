@@ -13,11 +13,13 @@ class MultiProjectSpec extends SparkSpec {
     val root = Files.createTempDirectory("multi_root").toString
     val p1 = MultiProjectStore.project(spark, root, "host1", "team", "alpha")
     val p2 = MultiProjectStore.project(spark, root, "host2", "team", "beta")
-    p1.appendRun(inv("i1", 1L, Some("build"), "2026-08-01 10:00:00", Some(1)),
-      Seq(ev("e1", "i1", 0, "error", "boom in alpha", fp = Some("f1"))))
-    p2.appendRun(inv("i2", 1L, Some("build"), "2026-08-01 11:00:00", Some(0)),
-      Seq(ev("e2", "i2", 0, "warning", "warn in beta", fp = Some("f2")),
-        ev("e3", "i2", 1, "error", "boom in beta", fp = Some("f3"))))
+    p1.commitRun(inv("i1", 1L, Some("build"), "2026-08-01 10:00:00", Some(1)),
+      Some(spark.createDataFrame(Seq(
+        ev("e1", "i1", 0, "error", "boom in alpha", fp = Some("f1"))))))
+    p2.commitRun(inv("i2", 1L, Some("build"), "2026-08-01 11:00:00", Some(0)),
+      Some(spark.createDataFrame(Seq(
+        ev("e2", "i2", 0, "warning", "warn in beta", fp = Some("f2")),
+        ev("e3", "i2", 1, "error", "boom in beta", fp = Some("f3"))))))
 
     val all = MultiProjectStore.readAll(spark, root, "events")
     assert(all.count() === 3)
@@ -39,8 +41,9 @@ class MultiProjectSpec extends SparkSpec {
     val local = Files.createTempDirectory("local_store").toString
     val central = Files.createTempDirectory("central_root").toString
     val store = new EventStore(spark, local)
-    store.appendRun(inv("s1", 1L, Some("test"), "2026-08-02 09:00:00", Some(1)),
-      Seq(ev("se1", "s1", 0, "error", "standalone boom", fp = Some("sf1"))))
+    store.commitRun(inv("s1", 1L, Some("test"), "2026-08-02 09:00:00", Some(1)),
+      Some(spark.createDataFrame(Seq(
+        ev("se1", "s1", 0, "error", "standalone boom", fp = Some("sf1"))))))
 
     val first = SyncStore.sync(spark, local, central, "laptop", "team", "gamma")
     assert(first.copied > 0 && first.skipped === 0)
@@ -54,8 +57,9 @@ class MultiProjectSpec extends SparkSpec {
 
     // incremental: one more run copies only the new files, and the
     // central copy never loses what it had
-    store.appendRun(inv("s2", 2L, Some("test"), "2026-08-03 09:00:00", Some(0)),
-      Seq(ev("se2", "s2", 0, "warning", "second run", fp = Some("sf2"))))
+    store.commitRun(inv("s2", 2L, Some("test"), "2026-08-03 09:00:00", Some(0)),
+      Some(spark.createDataFrame(Seq(
+        ev("se2", "s2", 0, "warning", "second run", fp = Some("sf2"))))))
     val third = SyncStore.sync(spark, local, central, "laptop", "team", "gamma")
     assert(third.copied > 0 && third.skipped >= second.skipped)
     val after = MultiProjectStore.readAll(spark, central, "events")

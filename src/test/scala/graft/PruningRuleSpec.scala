@@ -41,10 +41,10 @@ class PruningRuleSpec extends SparkSpec {
         .getOrCreate()
       val root = java.nio.file.Files.createTempDirectory("prune_store").toString
       val store = new EventStore(s2, root)
-      store.appendRun(mkInv("inv-a", 1, "2026-08-01"),
-        (0L until 3L).map(i => mkEvent("inv-a", i, "2026-08-01")))
-      store.appendRun(mkInv("inv-b", 2, "2026-08-02"),
-        (0L until 2L).map(i => mkEvent("inv-b", i, "2026-08-02")))
+      store.commitRun(mkInv("inv-a", 1, "2026-08-01"),
+        Some(s2.createDataFrame((0L until 3L).map(i => mkEvent("inv-a", i, "2026-08-01")))))
+      store.commitRun(mkInv("inv-b", 2, "2026-08-02"),
+        Some(s2.createDataFrame((0L until 2L).map(i => mkEvent("inv-b", i, "2026-08-02")))))
 
       val q = store.events.filter(col("invocation_id") === "inv-b")
       // logical: the rule added the date conjunct
@@ -76,8 +76,8 @@ class PruningRuleSpec extends SparkSpec {
       assert(q4.count() === 0L) // contradictory on purpose
 
       // appended runs are visible without reloading the store
-      store.appendRun(mkInv("inv-c", 3, "2026-08-03"),
-        Seq(mkEvent("inv-c", 0, "2026-08-03")))
+      store.commitRun(mkInv("inv-c", 3, "2026-08-03"),
+        Some(s2.createDataFrame(Seq(mkEvent("inv-c", 0, "2026-08-03")))))
       val q5 = store.events.filter(col("invocation_id") === "inv-c")
       assert(q5.queryExecution.optimizedPlan.toString.contains("2026-08-03"))
       assert(q5.count() === 1L)

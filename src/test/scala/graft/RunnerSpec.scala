@@ -182,6 +182,21 @@ class RunnerSpec extends SparkSpec {
       Map("provider" -> "github", "run_id" -> "77"))
   }
 
+  test("one refresh per run commit: imports fire 1, exec fires 3") {
+    val (runner, store) = mkRunner()
+    val refreshes = new java.util.concurrent.atomic.AtomicInteger(0)
+    store.onAppendRefresh(() => { refreshes.incrementAndGet(); () })
+    def refreshesFor(body: => Unit): Int = { refreshes.set(0); body; refreshes.get() }
+    assert(refreshesFor(runner.importContent(
+      "src/x.c:1:1: error: e\n", format = "gcc_text")) === 1)
+    val dir = Files.createTempDirectory("refresh_logs")
+    Files.writeString(dir.resolve("a.log"), "src/a.c:1:1: error: e\n")
+    assert(refreshesFor(runner.importDirectory(s"$dir/*.log")) === 1)
+    // attempt, outcome, then the run commit
+    assert(refreshesFor(runner.exec(Seq("sh", "-c",
+      "echo 'src/b.c:2:1: warning: w'"))) === 3)
+  }
+
   test("importDirectory: many files parse and land in one distributed job") {
     val (runner, store) = mkRunner()
     val dir = Files.createTempDirectory("bulk_logs")

@@ -109,8 +109,8 @@ class StreamingSpec extends SparkSpec {
     import Fixtures._
     val store = new graft.store.EventStore(spark,
       java.nio.file.Files.createTempDirectory("stream_store").toString)
-    store.appendRun(inv("i1", 1L, Some("b"), "2026-08-01 10:00:00", Some(1)),
-      Seq(ev("e1", "i1", 0, "error", "first batch")))
+    store.commitRun(inv("i1", 1L, Some("b"), "2026-08-01 10:00:00", Some(1)),
+      Some(spark.createDataFrame(Seq(ev("e1", "i1", 0, "error", "first batch")))))
     val query = store.eventsStream
       .writeStream.format("memory").queryName("events_stream_t")
       .outputMode(OutputMode.Append()).start()
@@ -118,9 +118,10 @@ class StreamingSpec extends SparkSpec {
       query.processAllAvailable()
       assert(spark.table("events_stream_t").count() === 1)
       // a new run appended AFTER the stream started appears incrementally
-      store.appendRun(inv("i2", 2L, Some("b"), "2026-08-01 11:00:00", Some(0)),
-        Seq(ev("e2", "i2", 0, "warning", "second batch"),
-          ev("e3", "i2", 1, "info", "third")))
+      store.commitRun(inv("i2", 2L, Some("b"), "2026-08-01 11:00:00", Some(0)),
+        Some(spark.createDataFrame(Seq(
+          ev("e2", "i2", 0, "warning", "second batch"),
+          ev("e3", "i2", 1, "info", "third")))))
       query.processAllAvailable()
       assert(spark.table("events_stream_t").count() === 3)
     } finally query.stop()
@@ -130,10 +131,10 @@ class StreamingSpec extends SparkSpec {
     import Fixtures._
     val store = new graft.store.EventStore(spark,
       java.nio.file.Files.createTempDirectory("alert_store").toString)
-    store.appendRun(inv("i1", 1L, Some("b"), "2026-08-01 10:00:00", Some(1)),
-      Seq(ev("e1", "i1", 0, "error", "boom"),
+    store.commitRun(inv("i1", 1L, Some("b"), "2026-08-01 10:00:00", Some(1)),
+      Some(spark.createDataFrame(Seq(ev("e1", "i1", 0, "error", "boom"),
         ev("e2", "i1", 1, "error", "boom2"),
-        ev("e3", "i1", 2, "warning", "warn")))
+        ev("e3", "i1", 2, "warning", "warn")))))
     val counts = LiveStreams.severityCounts(
       store.eventsStream, "timestamp", "1 minute", "10 minutes")
     val query = counts.writeStream.format("memory").queryName("alert_t")
@@ -150,14 +151,14 @@ class StreamingSpec extends SparkSpec {
     import Fixtures._
     val store = new graft.store.EventStore(spark,
       java.nio.file.Files.createTempDirectory("storm_store").toString)
-    store.appendRun(inv("i1", 1L, Some("b"), "2026-08-01 10:00:00", Some(1)),
-      Seq(
+    store.commitRun(inv("i1", 1L, Some("b"), "2026-08-01 10:00:00", Some(1)),
+      Some(spark.createDataFrame(Seq(
         ev("e1", "i1", 0, "error", "boom", fp = Some("fp_hot")),
         ev("e2", "i1", 1, "error", "boom again", fp = Some("fp_hot")),
         ev("e3", "i1", 2, "error", "boom third", fp = Some("fp_hot")),
         ev("e4", "i1", 3, "error", "once only", fp = Some("fp_cold")),
         ev("e5", "i1", 4, "error", "no fp"), // null fingerprint skipped
-        ev("e6", "i1", 5, "warning", "warn", fp = Some("fp_warn"))))
+        ev("e6", "i1", 5, "warning", "warn", fp = Some("fp_warn"))))))
     val hot = LiveStreams.hotFingerprints(
       store.eventsStream, "timestamp", "5 minutes", "10 minutes", minCount = 2L)
     val query = hot.writeStream.format("memory").queryName("storm_t")
