@@ -65,22 +65,18 @@ final class Analytics(store: EventStore) {
 
   /** Fingerprint set algebra between two runs (J10/U2;
     * services/query.py:380-412): status ∈ fixed (only in r1), new
-    * (only in r2), unchanged (both). Left-anti/semi joins on the dedup
-    * key — never a collect. */
-  def fingerprintDiff(serial1: Long, serial2: Long): DataFrame = {
-    def fps(serial: Long) =
-      flat.filter(col("run_serial") === serial &&
-          col("severity") === "error" && col("fingerprint").isNotNull)
-        .select(col("fingerprint")).distinct()
-    val f1 = fps(serial1); val f2 = fps(serial2)
-    val fixed = f1.join(f2, Seq("fingerprint"), "left_anti")
-      .withColumn("status", lit("fixed"))
-    val fresh = f2.join(f1, Seq("fingerprint"), "left_anti")
-      .withColumn("status", lit("new"))
-    val unchanged = f1.join(f2, Seq("fingerprint"), "left_semi")
-      .withColumn("status", lit("unchanged"))
-    fixed.unionByName(fresh).unionByName(unchanged)
-  }
+    * (only in r2), unchanged (both). One aggregation on the dedup key
+    * over both runs' errors, each fingerprint flagged by the runs it
+    * occurs in — one shuffle, never a collect. */
+  def fingerprintDiff(serial1: Long, serial2: Long): DataFrame =
+    flat.filter(col("run_serial").isin(serial1, serial2) &&
+        col("severity") === "error" && col("fingerprint").isNotNull)
+      .groupBy(col("fingerprint"))
+      .agg(max(col("run_serial") === serial1).as("in1"),
+        max(col("run_serial") === serial2).as("in2"))
+      .select(col("fingerprint"),
+        when(!col("in2"), "fixed").when(!col("in1"), "new")
+          .otherwise("unchanged").as("status"))
 
   /** Fingerprint history with regression detection (events.py:585-648
     * semantics): per fingerprint — first/last seen, occurrence count,
@@ -130,12 +126,13 @@ final class Analytics(store: EventStore) {
     * internals to maintain (the reference gets this via an ART index,
     * bird_schema.sql:259-279). */
   def eventsForRun(serial: Long): DataFrame = {
-    val run = store.invocations.filter(col("run_serial") === serial)
+    val s = store.snapshot
+    val run = s.invocations.filter(col("run_serial") === serial)
       .select(col("id"), col("date")).collect()
     run.headOption match {
-      case None => store.events.limit(0)
+      case None => s.events.limit(0)
       case Some(r) =>
-        store.events
+        s.events
           .filter(col("date") === r.getDate(1))       // partition prune
           .filter(col("invocation_id") === r.getString(0))
     }

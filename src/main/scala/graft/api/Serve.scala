@@ -303,12 +303,14 @@ final class Serve(private[api] val engine: GraftEngine) {
       }
     case "info" =>
       val ref = args.getOrElse("ref", "~1")
-      val df = engine.run(ref)
+      // rendered once: an emptiness check first would run the runs
+      // rollup twice
+      val out = json(engine.run(ref)
         .select("run_ref", "run_serial", "invocation_id", "source_name", "tag",
           "command", "status_badge", "exit_code", "started_at", "duration_ms",
           "event_count", "errors", "warnings", "unique_errors", "hostname",
-          "platform", "arch", "git_commit", "git_branch", "git_dirty")
-      if (df.isEmpty) err(s"no run matches ref '$ref'") else json(df, 1)
+          "platform", "arch", "git_commit", "git_branch", "git_dirty"), 1)
+      if (out == "[]") err(s"no run matches ref '$ref'") else out
     case "last" =>
       import org.apache.spark.sql.functions.col
       val lastRun = engine.runs

@@ -234,7 +234,10 @@ final class Runner(store: EventStore, blobs: BlobStore,
       date = dateOf(started))
   }
 
-  /** Parsed events → fingerprinted event rows; None when nothing parsed. */
+  /** Parsed events → fingerprinted event rows; None when nothing parsed.
+    * The rows already sit in driver memory, so the frame is one
+    * partition: the run commits as one events file, not one per local
+    * scan slice. */
   private def eventFrame(invocationId: String, started: Timestamp,
       parsed: Seq[graft.parse.ParsedEvent]): Option[DataFrame] =
     Option.when(parsed.nonEmpty) {
@@ -251,5 +254,6 @@ final class Runner(store: EventStore, blobs: BlobStore,
         .withColumn("context", lit(null).cast("string"))
         .withColumn("metadata", lit(null).cast("string"))
         .withColumn("date", lit(dateOf(started)))
+        .coalesce(1)
     }
 }

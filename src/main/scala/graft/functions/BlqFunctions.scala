@@ -12,10 +12,6 @@ import org.apache.spark.sql.functions._
   */
 object BlqFunctions {
 
-  /** "run:event" reference string (schema.sql:290-291). */
-  def blqRef(runId: Column, eventId: Column): Column =
-    concat(runId.cast("string"), lit(":"), eventId.cast("string"))
-
   /** Parse "run:event" back to a struct (schema.sql:293-297). */
   def blqParseRef(ref: Column): Column =
     struct(

@@ -658,6 +658,38 @@ object CorpusPipeline {
     ()
   }
 
+  /** One drained takedown slice's durable effects. The bar leg runs
+    * CONCURRENT with the forget legs (r19 opt — the screen/append-slot
+    * idiom): the bar parquet and the index/store forget touch disjoint
+    * storage, both are idempotent, and neither has an ordering
+    * contract with the other. Both legs settle before anything
+    * propagates — the first failure is rethrown with the other
+    * attached as suppressed, so neither is lost and no leg keeps
+    * running unobserved — and the high-water advances only after both
+    * succeeded: a crash or failure before it replays the slice into
+    * idempotent bars, tombstone adds and an already-clean store
+    * (at-least-once, exactly-once effect). Returns the forget leg's
+    * result (the store partitions rewritten). */
+  private[graft] def commitDrain(spark: org.apache.spark.sql.SparkSession,
+      stateDir: String, newHw: Long, bar: () => Unit,
+      forget: () => Seq[String]): Seq[String] = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val barF = Future(scala.concurrent.blocking {
+      // active session pinned per thread — the forget-leg idiom
+      // (shared pool threads may carry a stale one)
+      org.apache.spark.sql.SparkSession.setActiveSession(spark)
+      bar()
+    })
+    val forgotten = scala.util.Try(forget())
+    val barred = scala.util.Try(Await.result(barF, scala.concurrent.duration.Duration.Inf))
+    forgotten.failed.foreach(e => barred.failed.foreach(e.addSuppressed))
+    val parts = forgotten.get
+    barred.get
+    writeForgetHw(spark, stateDir, newHw)
+    parts
+  }
+
   /** Read the forget-feed high-water (-1 = nothing processed). */
   private def readForgetHw(spark: org.apache.spark.sql.SparkSession,
       dir: String): Long = readLongState(spark, dir, "hw").getOrElse(-1L)
@@ -1533,32 +1565,12 @@ object CorpusPipeline {
             // checkpoint is a single tiny job)
             val ids = pending.select(col("doc_id") +: hintCols: _*)
               .localCheckpoint(true)
-            // durable bar CONCURRENT with the forget legs (r19 opt —
-            // the screen/append-slot idiom): the bar parquet and the
-            // index/store forget touch disjoint storage, both are
-            // idempotent, and neither has an ordering contract with
-            // the other — only the high-water below must wait for
-            // BOTH (same crash contract: a replay re-bars and
-            // re-tombstones idempotently; a bar failure propagates
-            // from the Await before the high-water ever advances)
-            val barF = {
-              import scala.concurrent.ExecutionContext.Implicits.global
-              scala.concurrent.Future(scala.concurrent.blocking {
-                // active session pinned per thread — the forget-leg
-                // idiom (shared pool threads may carry a stale one)
-                org.apache.spark.sql.SparkSession.setActiveSession(spark)
-                barIds(spark, fc.stateDir, ids.select(col("doc_id"))) })
-            }
-            val parts = fc.store match {
-              case Some(st) => forgetWithStore(spark, maint, st, ids)
-              case None => forget(spark, maint, ids); Seq.empty
-            }
-            scala.concurrent.Await.result(barF,
-              scala.concurrent.duration.Duration.Inf)
-            // high-water AFTER the forget: a crash in between replays
-            // the slice into idempotent tombstone adds and an
-            // already-clean store (at-least-once, exactly-once effect)
-            writeForgetHw(spark, fc.stateDir, newHw)
+            val parts = commitDrain(spark, fc.stateDir, newHw,
+              bar = () => barIds(spark, fc.stateDir, ids.select(col("doc_id"))),
+              forget = () => fc.store match {
+                case Some(st) => forgetWithStore(spark, maint, st, ids)
+                case None => forget(spark, maint, ids); Seq.empty
+              })
             // a takedown STALES the shard export too — the live
             // export keeps serving the forgotten docs until a refresh
             // reads the post-forget store, and the staleness clock

@@ -397,15 +397,6 @@ object Multimodal {
       .select(col("media_id"),
         explode(sequence(lit(0), col("n_frames") - 1, lit(stride))).as("frame_idx"))
 
-  /** Resize plan: metadata-only transform (target box preserving
-    * aspect), demonstrating typed-metadata flow without touching
-    * payloads. */
-  def resizePlan(meta: Dataset[MediaMeta], maxSide: Int): DataFrame =
-    meta.toDF().withColumn("scale",
-        least(lit(maxSide) / col("width"), lit(maxSide) / col("height"), lit(1.0)))
-      .withColumn("out_width", floor(col("width") * col("scale")).cast("int"))
-      .withColumn("out_height", floor(col("height") * col("scale")).cast("int"))
-
   /** Perceptual image hashing over REAL decoded pixels (r12) — the
     * multimodal member of the dedup family: aHash (average hash) and
     * dHash (gradient hash), the published perceptual-dedup recipes

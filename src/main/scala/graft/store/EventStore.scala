@@ -1,35 +1,94 @@
 package graft.store
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.model._
+
+/** One immutable read generation of an [[EventStore]]: the five
+  * relations, each a declared-schema parquet read whose file listing
+  * was taken once, when the table last changed. Every frame a reader
+  * derives from one snapshot sees the same committed state, however
+  * many queries it plans. The contract (who advances a generation,
+  * when) is on [[EventStore.commitRun]]. */
+final class StoreSnapshot private[store] (
+    val generation: Long,
+    tables: Map[String, StoreSnapshot.Table],
+    knownMaxSerial: Option[Long]) {
+
+  def events: DataFrame = tables("events").df
+  def invocations: DataFrame = tables("invocations").df
+  def attempts: DataFrame = tables("attempts").df
+  def outcomes: DataFrame = tables("outcomes").df
+  def outputs: DataFrame = tables("outputs").df
+
+  private[store] def table(name: String): StoreSnapshot.Table = tables(name)
+
+  @volatile private var maxSerial: Option[Long] = knownMaxSerial
+
+  /** Highest committed run serial: carried over from the previous
+    * generation on this engine's own commits, one aggregate over the
+    * invocations relation only when that table was read from disk —
+    * per-partition maxima, so one job and no shuffle. */
+  def maxRunSerial: Long = maxSerial.getOrElse(synchronized {
+    maxSerial.getOrElse {
+      val spark = invocations.sparkSession
+      import spark.implicits._
+      val m = invocations.select($"run_serial").as[Long]
+        .mapPartitions(it => Iterator(it.foldLeft(0L)(math.max)))
+        .collect().foldLeft(0L)(math.max)
+      maxSerial = Some(m)
+      m
+    }
+  })
+
+  private[store] def maxRunSerialIfKnown: Option[Long] = maxSerial
+}
+
+object StoreSnapshot {
+  /** Visible children of a table root (partition directories, or part
+    * files of an unpartitioned table) as sorted (name, mtime) pairs;
+    * None when the table does not exist. Adding, removing or renaming
+    * a part file changes its partition directory's mtime, and a new or
+    * deleted partition changes the names. */
+  private[store] type Signature = Option[Vector[(String, Long)]]
+
+  private[store] final case class Table(df: DataFrame, signature: Signature)
+}
 
 /** Append-only partitioned-Parquet storage — the Spark-native shape of
   * the reference's "legacy" parquet mode (SURVEY.md §1.1: `.bird/logs/`
-  * with `date=…/source=…` hive partitions, schema.sql:4-13,
-  * core.py:1926-2012), which we adopt as the PRIMARY store: at 100 TB a
-  * single-writer DuckDB file is not an option, an append-only
-  * partitioned table is.
+  * with `date=…` hive partitions, schema.sql:4-13, core.py:1926-2012),
+  * which we adopt as the PRIMARY store: at 100 TB a single-writer
+  * DuckDB file is not an option, an append-only partitioned table is.
   *
   * Layout:
   * {{{
   *   root/invocations/date=YYYY-MM-DD/…       (small dimension)
-  *   root/events/date=YYYY-MM-DD/source_type=…/…  (big fact)
+  *   root/events/date=YYYY-MM-DD/…            (big fact)
+  *   root/outputs/date=…                      (captured-output rows)
   *   root/attempts/date=…, root/outcomes/date=…   (lifecycle streams)
   * }}}
   *
   * Scale design:
   *  - zstd compression (reference writes zstd level 3, core.py:2008);
-  *  - `date` (+ `source_type` for events) partition columns → partition
-  *    pruning for every recency/source predicate;
+  *  - `date` partition column → partition pruning for every recency
+  *    predicate;
   *  - `run_serial` is persisted at write time (single writer per store,
   *    like the reference's lock-guarded get_next_run_number) so no read
   *    path ever needs a global ROW_NUMBER window (§7.4 risk 1);
-  *  - schema drift tolerated on read via mergeSchema
-  *    (= union_by_name=true, schema.sql:51).
+  *  - reads use the declared model schema (`Event`, `Invocation`,
+  *    `Attempt`, `Outcome`, `Output`; `date` is the partition column):
+  *    building a relation runs no schema-inference job, and columns
+  *    outside the model are not read. [[GraftMigrations]] still adapts
+  *    raw reads of stores written under an older schema;
+  *  - reads are served from one [[StoreSnapshot]] per commit
+  *    generation (contract on [[commitRun]]).
   */
 class EventStore(val spark: SparkSession, val root: String) {
   import spark.implicits._
+  import EventStore.TableNames
+  import StoreSnapshot.{Signature, Table}
 
   private def path(table: String) = s"$root/$table"
 
@@ -47,11 +106,9 @@ class EventStore(val spark: SparkSession, val root: String) {
     * concurrent external writers). */
   def invocationDate(id: String): Option[String] =
     Option(invDates.get(id)).orElse {
-      val fetched =
-        if (!exists("invocations")) None
-        else invocations.filter($"id" === id)
-          .select($"date".cast("string")).limit(1)
-          .collect().headOption.map(_.getString(0))
+      val fetched = invocations.filter($"id" === id)
+        .select($"date".cast("string")).limit(1)
+        .collect().headOption.map(_.getString(0))
       fetched.foreach(invDates.put(id, _))
       fetched
     }
@@ -66,46 +123,107 @@ class EventStore(val spark: SparkSession, val root: String) {
     }
   graft.plans.InvocationDatePruning.register(path("events"), dateSource)
 
+  // ---- generations ---------------------------------------------------
+
+  private val schemas: Map[String, StructType] = Map(
+    "events" -> implicitly[Encoder[Event]].schema,
+    "invocations" -> implicitly[Encoder[Invocation]].schema,
+    "attempts" -> implicitly[Encoder[Attempt]].schema,
+    "outcomes" -> implicitly[Encoder[Outcome]].schema,
+    "outputs" -> implicitly[Encoder[Output]].schema)
+
+  private val lock = new Object
+  @volatile private var current: StoreSnapshot = _
+  // the session's SQL views, once installed (Views.registerAll)
+  @volatile private var views: Option[StoreSnapshot => Unit] = None
+
+  private def signature(table: String): Signature = {
+    val p = new org.apache.hadoop.fs.Path(path(table))
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    try Some(fs.listStatus(p).iterator
+      .map(s => s.getPath.getName -> s.getModificationTime)
+      .filterNot { case (n, _) => n.startsWith("_") || n.startsWith(".") }
+      .toVector.sorted)
+    catch { case _: java.io.FileNotFoundException => None }
+  }
+
+  /** The table as of `sig`: the signature is taken BEFORE Spark lists
+    * the files, so a write landing in between makes the next check
+    * rebuild again, never serve a listing older than its signature. */
+  private def load(table: String, sig: Signature): Table =
+    Table(
+      if (sig.isEmpty)
+        spark.createDataFrame(java.util.List.of[org.apache.spark.sql.Row](), schemas(table))
+      else spark.read.schema(schemas(table)).parquet(path(table)),
+      sig)
+
+  /** Publish the next generation: `written` tables (this engine's own
+    * writes) are rebuilt unconditionally, every other table only when
+    * its signature moved. `serial` is the run serial this engine just
+    * committed, if any. */
+  private def advance(written: Seq[String], serial: Option[Long]): StoreSnapshot =
+    lock.synchronized {
+      val prev = Option(current)
+      val sigs = TableNames.map(t => t -> signature(t)).toMap
+      val rebuild = TableNames.filter(t =>
+        written.contains(t) || !prev.exists(_.table(t).signature == sigs(t)))
+      if (prev.nonEmpty && rebuild.isEmpty) prev.get
+      else {
+        // The run serial and the cached invocation dates carry over only
+        // through a commit's own invocation write; any other change to the
+        // invocations table (a foreign writer, a maintenance delete) drops
+        // them: the serial is re-read by one aggregate, on demand.
+        val reread = rebuild.contains("invocations") && serial.isEmpty
+        if (reread) invDates.clear()
+        val knownMax =
+          if (sigs("invocations").isEmpty) Some(0L) // no table, no run yet
+          else if (reread) None
+          else prev.flatMap(_.maxRunSerialIfKnown).map(m => serial.fold(m)(math.max(m, _)))
+        val next = new StoreSnapshot(prev.fold(0L)(_.generation + 1),
+          TableNames.map(t => t -> (
+            if (rebuild.contains(t)) load(t, sigs(t)) else prev.get.table(t))).toMap,
+          knownMax)
+        current = next
+        views.foreach(_(next))
+        next
+      }
+    }
+
+  /** The current generation. One Hadoop `listStatus` per table root
+    * compares partition names and mtimes with the snapshot's: a writer
+    * outside this engine (another process, a second EventStore on this
+    * root, an external `rm`) advances the generation here, rebuilding
+    * only the tables it touched. No Spark job runs. */
+  def snapshot: StoreSnapshot = advance(Nil, None)
+
+  /** Keep the session's SQL views on this store's generations:
+    * `register` runs now and on every later generation. It is expected
+    * to skip a generation it has already registered. */
+  def installViews(register: StoreSnapshot => Unit): Unit = lock.synchronized {
+    views = Some(register)
+    register(advance(Nil, None))
+  }
+
+  /** After deleted or rewritten table data (Maintenance's prunes,
+    * compaction and partition deletes): every table is re-read, and
+    * the run serial and cached invocation dates with them. */
+  def invalidate(): Unit = { advance(TableNames, None); () }
+
+  // ---- write path (S9/S10) -------------------------------------------
+
   private def writer[T](ds: Dataset[T], cols: Seq[String]) =
     ds.write.mode(SaveMode.Append)
       .option("compression", "zstd")
       .partitionBy(cols: _*)
 
-  // Post-append refresh (Views.registerAll installs one): re-registers
-  // the SQL views with fresh file listings after every store write.
-  @volatile private var refreshHook: () => Unit = () => ()
-
-  /** Install the post-append refresh (single slot, idempotent to
-    * re-registration). */
-  def onAppendRefresh(f: () => Unit): Unit = refreshHook = f
-
-  private def refreshed(tables: String*): Unit = {
-    for (t <- tables)
-      try spark.catalog.refreshByPath(path(t))
-      catch { case scala.util.control.NonFatal(_) => }
-    refreshHook()
-  }
-
-  /** Invalidate every table's file listing AND re-register views —
-    * for DELETE-shaped maintenance (prune/clean): refreshByPath alone
-    * only refreshes cached datasets, while registered temp views keep
-    * their snapshot listings and would plan against deleted part
-    * files. */
-  def refreshAllViews(): Unit = {
-    invDates.clear()
-    refreshed("attempts", "outcomes", "invocations", "events", "outputs")
-  }
-
-  // ---- write path (S9/S10) -------------------------------------------
-
   def appendAttempts(attempts: Seq[Attempt]): Unit = {
     writer(attempts.toDS(), Seq("date")).parquet(path("attempts"))
-    refreshed("attempts")
+    advance(Seq("attempts"), None)
   }
 
   def appendOutcomes(outcomes: Seq[Outcome]): Unit = {
     writer(outcomes.toDS(), Seq("date")).parquet(path("outcomes"))
-    refreshed("outcomes")
+    advance(Seq("outcomes"), None)
   }
 
   /** Write-side clustering for event files: sorted by (date, severity,
@@ -123,8 +241,7 @@ class EventStore(val spark: SparkSession, val root: String) {
     * frame (e.g. a VOID-typed null literal) can never poison the
     * store's parquet schema. */
   private def writeEvents(df: DataFrame): Unit = {
-    val schema = implicitly[org.apache.spark.sql.Encoder[Event]].schema
-    val aligned = df.select(schema.fields.map { f =>
+    val aligned = df.select(schemas("events").fields.map { f =>
       if (df.columns.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
       else lit(null).cast(f.dataType).as(f.name)
     }.toSeq: _*)
@@ -137,11 +254,21 @@ class EventStore(val spark: SparkSession, val root: String) {
     * Writes the run's events, then its output rows, then its
     * invocation row LAST: a crash mid-commit leaves dangling,
     * joined-away events, never a committed run row claiming zero
-    * events. One refresh follows the commit: the tables' cached file
-    * listings, then the post-append hook, once per run — a registered
-    * view's listing is a snapshot, so the hook's re-registration is
-    * what lets raw `spark.sql` see the new rows.
-    * Caller assigns run_serial via [[nextRunSerial]]. */
+    * events. Caller assigns run_serial via [[nextRunSerial]].
+    *
+    * Snapshot contract. Every read ([[events]], [[invocations]], …,
+    * the `Views`, `Analytics`, `Serve` and the registered SQL views)
+    * is served from [[snapshot]], one immutable generation of the five
+    * relations. A generation advances only after a write has
+    * completed: here once per run, after the invocation row; in
+    * [[appendEvents]], [[appendAttempts]] and [[appendOutcomes]] after
+    * their write; in [[invalidate]] after a maintenance delete. An
+    * advance rebuilds only the tables written (a new declared-schema
+    * read, so a new file listing) and swaps the snapshot atomically —
+    * concurrent readers keep planning against the one they hold. The
+    * run serial advances in place on this engine's commits. Installed
+    * SQL views are re-registered on every advance, so raw `spark.sql`
+    * sees the new run without a further call. */
   def commitRun(inv: Invocation, events: Option[DataFrame] = None,
       outputs: Seq[Output] = Nil): Unit = {
     events.foreach(writeEvents)
@@ -149,60 +276,40 @@ class EventStore(val spark: SparkSession, val root: String) {
       writer(outputs.toDS(), Seq("date")).parquet(path("outputs"))
     writer(Seq(inv).toDS(), Seq("date")).parquet(path("invocations"))
     invDates.put(inv.id, inv.date.toString)
-    refreshed("events", "outputs", "invocations")
+    advance(Seq("invocations") ++ events.map(_ => "events") ++
+      Option.when(outputs.nonEmpty)("outputs"), Some(inv.run_serial))
   }
 
   /** Standalone event append for frames outside a run commit (the live
-    * stream's micro-batches), with its own refresh. */
+    * stream's micro-batches); advances the generation like a commit. */
   def appendEvents(df: DataFrame): Unit = {
     writeEvents(df)
-    refreshed("events")
+    advance(Seq("events"), None)
   }
 
   /** Next run serial. Single-writer discipline (reference holds a DB
     * lock, bird.py:36-99; here one Spark driver owns a store root).
-    * Reads only the tiny invocations dimension. */
-  def nextRunSerial(): Long =
-    if (!exists("invocations")) 1L
-    else invocations.agg(max($"run_serial")).as[Option[Long]].first().getOrElse(0L) + 1L
+    * No job once the snapshot knows its max (see
+    * [[StoreSnapshot.maxRunSerial]]). */
+  def nextRunSerial(): Long = snapshot.maxRunSerial + 1L
 
   // ---- read path (S1/S3) ---------------------------------------------
 
-  private def exists(table: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path(table))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p)
-  }
-
-  private def read(table: String): DataFrame =
-    spark.read.option("mergeSchema", "true").parquet(path(table))
-
-  private def emptyDs[T: org.apache.spark.sql.Encoder]: DataFrame =
-    spark.emptyDataset[T].toDF()
-
-  def attempts: DataFrame =
-    if (exists("attempts")) read("attempts") else emptyDs[Attempt]
-  def outcomes: DataFrame =
-    if (exists("outcomes")) read("outcomes") else emptyDs[Outcome]
-  def invocations: DataFrame =
-    if (exists("invocations")) read("invocations") else emptyDs[Invocation]
-  def events: DataFrame =
-    if (exists("events")) read("events") else emptyDs[Event]
-  def outputs: DataFrame =
-    if (exists("outputs")) read("outputs") else emptyDs[Output]
+  def attempts: DataFrame = snapshot.attempts
+  def outcomes: DataFrame = snapshot.outcomes
+  def invocations: DataFrame = snapshot.invocations
+  def events: DataFrame = snapshot.events
+  def outputs: DataFrame = snapshot.outputs
 
   /** Streaming view of the events table: each appended run's parquet
     * files surface as new micro-batch rows — the bridge from the
     * append-only store to incremental consumers (alerting, rollup
     * maintenance) without re-reading history. */
-  def eventsStream: DataFrame = {
-    val schema = implicitly[org.apache.spark.sql.Encoder[Event]].schema
+  def eventsStream: DataFrame =
     spark.readStream
-      .schema(org.apache.spark.sql.types.StructType(
-        schema.fields.filterNot(_.name == "date")))
+      .schema(StructType(schemas("events").fields.filterNot(_.name == "date")))
       .option("maxFilesPerTrigger", "64")
       .parquet(path("events"))
-  }
 
   // ---- maintenance (W3/T4 analogs) -----------------------------------
 
@@ -223,4 +330,9 @@ class EventStore(val spark: SparkSession, val root: String) {
       }
       .map(_.toString)
   }
+}
+
+object EventStore {
+  private val TableNames: Seq[String] =
+    Seq("events", "invocations", "attempts", "outcomes", "outputs")
 }

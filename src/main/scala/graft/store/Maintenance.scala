@@ -303,7 +303,7 @@ final class Maintenance(store: EventStore) {
     rewriteWithout("invocations", "id", ids, dates)
     rewriteWithout("events", "invocation_id", ids, dates)
     rewriteWithout("outputs", "invocation_id", ids, dates)
-    store.refreshAllViews()
+    store.invalidate()
     ids
   }
 
@@ -424,7 +424,7 @@ final class Maintenance(store: EventStore) {
       }
       fs.delete(old, true)
     }
-    if (targets.nonEmpty) store.refreshAllViews()
+    if (targets.nonEmpty) store.invalidate()
     targets
   }
 
@@ -458,8 +458,8 @@ final class Maintenance(store: EventStore) {
 
   /** Delete a list of partition-directory targets (the output of
     * [[pruneByAge]]/[[pruneBySize]]/[[pruneBySizeTotal]]), then
-    * invalidate listings AND re-register views (refreshByPath alone
-    * leaves registered temp views planning against deleted files).
+    * advance the store's generation ([[EventStore.invalidate]]), so
+    * no read or registered view plans against deleted files.
     * Returns the count actually removed. */
   def deleteTargets(targets: Seq[String]): Int = {
     val spark = store.spark
@@ -469,7 +469,7 @@ final class Maintenance(store: EventStore) {
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (fs.exists(p) && fs.delete(p, true)) n += 1
     }
-    store.refreshAllViews()
+    store.invalidate()
     n
   }
 

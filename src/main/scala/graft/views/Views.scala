@@ -3,7 +3,7 @@ package graft.views
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.store.EventStore
+import graft.store.{EventStore, StoreSnapshot}
 import graft.functions.BlqFunctions._
 
 /** The reference's view/macro layer (SURVEY.md §2.1 S3, §2.3-§2.5)
@@ -17,8 +17,10 @@ object Views {
     * side never shuffles for this join at any scale. run_serial is read
     * from the persisted column (assigned at write, §7.4 risk 1) instead
     * of the reference's global ROW_NUMBER window. */
-  def eventsFlat(store: EventStore): DataFrame =
-    flatJoin(store.events, store.invocations, hintBroadcast = true)
+  def eventsFlat(store: EventStore): DataFrame = {
+    val s = store.snapshot
+    flatJoin(s.events, s.invocations, hintBroadcast = true)
+  }
 
   /** The J1 flat-view join SHAPE over explicit frames — one definition
     * for every storage layout. `hintBroadcast = true` for the standard
@@ -49,17 +51,17 @@ object Views {
     * counts + filtered counts + distinct-fingerprint counts per run.
     * Map-side partial agg on invocation_id; at 100 TB swap
     * countDistinct → approx_count_distinct (A2 scale note). */
-  def runs(store: EventStore): DataFrame = runs(store.events, store.invocations)
+  def runs(store: EventStore): DataFrame = runs(store.snapshot)
 
-  private def runs(events: DataFrame, invocations: DataFrame): DataFrame = {
-    val perRun = events.groupBy(col("invocation_id")).agg(
+  private def runs(s: StoreSnapshot): DataFrame = {
+    val perRun = s.events.groupBy(col("invocation_id")).agg(
       count(lit(1)).as("event_count"),
       count(when(col("severity") === "error", 1)).as("errors"),
       count(when(col("severity") === "warning", 1)).as("warnings"),
       countDistinct(when(col("severity") === "error", col("fingerprint"))).as("unique_errors"),
       min(col("timestamp")).as("first_event_at"),
       max(col("timestamp")).as("last_event_at"))
-    invocations.withColumnRenamed("id", "invocation_id")
+    s.invocations.withColumnRenamed("id", "invocation_id")
       .join(perRun, Seq("invocation_id"), "left")
       .withColumn("event_count", coalesce(col("event_count"), lit(0L)))
       .withColumn("errors", coalesce(col("errors"), lit(0L)))
@@ -72,12 +74,11 @@ object Views {
   /** Attempt lifecycle status (J2; bird_schema.sql:371-406): LEFT join
     * outcomes, status from null-ness — pending (no outcome), orphaned
     * (outcome with NULL exit), timeout, ok, failed. */
-  def attemptStatus(store: EventStore): DataFrame =
-    attemptStatus(store.attempts, store.outcomes)
+  def attemptStatus(store: EventStore): DataFrame = attemptStatus(store.snapshot)
 
-  private def attemptStatus(attempts: DataFrame, outcomes: DataFrame): DataFrame = {
-    val o = outcomes.withColumnRenamed("date", "outcome_date")
-    attempts.join(o, attempts("id") === o("attempt_id"), "left")
+  private def attemptStatus(s: StoreSnapshot): DataFrame = {
+    val o = s.outcomes.withColumnRenamed("date", "outcome_date")
+    s.attempts.join(o, s.attempts("id") === o("attempt_id"), "left")
       .withColumn("status",
         when(col("attempt_id").isNull, "pending")
           .when(col("timeout") === true, "timeout")
@@ -89,8 +90,10 @@ object Views {
 
   /** Status board (U1+W2; bird_schema.sql:518-574): latest completed run
     * per source UNION pending attempts. */
-  def sourceStatus(store: EventStore): DataFrame =
-    sourceStatus(runs(store), attemptStatus(store))
+  def sourceStatus(store: EventStore): DataFrame = {
+    val s = store.snapshot
+    sourceStatus(runs(s), attemptStatus(s))
+  }
 
   private def sourceStatus(runsDf: DataFrame, statusDf: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("source_name"))
@@ -115,30 +118,34 @@ object Views {
     store.events.filter(col("date") >= date_sub(current_date(), days))
 
   /** Register every relation as a temp view so spark.sql() works like
-    * the reference's macro surface (§3.2), and install the
-    * re-registration as the store's post-append refresh (the contract
-    * is on [[EventStore.commitRun]]). */
-  def registerAll(store: EventStore): Unit = {
-    store.onAppendRefresh(() => registerViews(store))
-    registerViews(store)
-  }
+    * the reference's macro surface (§3.2), kept on the store's current
+    * generation (the contract is on [[EventStore.commitRun]]). Cheap
+    * when nothing moved: the views are re-registered only when the
+    * generation differs from the one last registered. */
+  def registerAll(store: EventStore): Unit = store.installViews(registerViews)
 
-  /** Each table is read ONCE (a read is a schema-merge job) and the
-    * four `blq_*` views are derived from those frames. */
-  private def registerViews(store: EventStore): Unit = {
-    val (events, invocations) = (store.events, store.invocations)
-    val (attempts, outcomes) = (store.attempts, store.outcomes)
-    val runsDf = runs(events, invocations)
-    val statusDf = attemptStatus(attempts, outcomes)
-    events.createOrReplaceTempView("events_raw")
-    invocations.createOrReplaceTempView("invocations")
-    attempts.createOrReplaceTempView("attempts")
-    outcomes.createOrReplaceTempView("outcomes")
-    store.outputs.createOrReplaceTempView("outputs")
-    flatJoin(events, invocations, hintBroadcast = true)
-      .createOrReplaceTempView("blq_events")
-    runsDf.createOrReplaceTempView("blq_runs")
-    statusDf.createOrReplaceTempView("blq_attempt_status")
-    sourceStatus(runsDf, statusDf).createOrReplaceTempView("blq_source_status")
+  // The snapshot the session's views were last registered from. Any
+  // store's registration replaces it, so an engine whose views another
+  // store's registration displaced registers its own again.
+  private var registered = new java.lang.ref.WeakReference[StoreSnapshot](null)
+
+  /** The five relations of one snapshot, and the four `blq_*` views
+    * derived from them; runs no Spark job. */
+  private def registerViews(s: StoreSnapshot): Unit = synchronized {
+    if (registered.get() ne s) {
+      val runsDf = runs(s)
+      val statusDf = attemptStatus(s)
+      s.events.createOrReplaceTempView("events_raw")
+      s.invocations.createOrReplaceTempView("invocations")
+      s.attempts.createOrReplaceTempView("attempts")
+      s.outcomes.createOrReplaceTempView("outcomes")
+      s.outputs.createOrReplaceTempView("outputs")
+      flatJoin(s.events, s.invocations, hintBroadcast = true)
+        .createOrReplaceTempView("blq_events")
+      runsDf.createOrReplaceTempView("blq_runs")
+      statusDf.createOrReplaceTempView("blq_attempt_status")
+      sourceStatus(runsDf, statusDf).createOrReplaceTempView("blq_source_status")
+      registered = new java.lang.ref.WeakReference(s)
+    }
   }
 }

@@ -211,9 +211,34 @@ class EngineSpec extends SparkSpec {
       .importContent("captured output\n")
     for (t <- Seq("events", "invocations", "attempts", "outcomes", "outputs"))
       assert(new java.io.File(s"$root/$t").isDirectory, s"$t missing")
-    // one schema-merge read (one job) per table; the blq_* views are
-    // derived from those frames, not re-read
+    // declared-schema reads of the current snapshot: no schema-merge
+    // job per table, and the blq_* views are derived from those frames
     val jobs = jobsFor(Views.registerAll(s))
-    assert(jobs <= 5, s"view registration ran $jobs jobs")
+    assert(jobs == 0, s"view registration ran $jobs jobs")
+  }
+
+  test("store relations: building each of the five runs no Spark job") {
+    val root = Files.createTempDirectory("decl_store").toString
+    Fixtures.populate(new EventStore(spark, root))
+    new graft.exec.Runner(new EventStore(spark, root),
+      new graft.store.BlobStore(s"$root/blobs")).importContent("captured output\n")
+    // a fresh store on the populated root: its first snapshot is read
+    // from disk with the declared model schemas, not schema-merged
+    val s = new EventStore(spark, root)
+    val built = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "events" -> (() => s.events), "invocations" -> (() => s.invocations),
+      "attempts" -> (() => s.attempts), "outcomes" -> (() => s.outcomes),
+      "outputs" -> (() => s.outputs))
+    for ((t, rel) <- built) {
+      var df: org.apache.spark.sql.DataFrame = null
+      val jobs = jobsFor { df = rel() }
+      assert(jobs == 0, s"building $t ran $jobs jobs")
+      assert(df.columns.last === "date", t)
+    }
+    assert(s.events.count() === 5 && s.invocations.count() === 4)
+    assert(s.outputs.count() === 1 && s.attempts.count() === 2)
+    // the declared schema is the model's, whatever the files carry
+    assert(s.events.schema.fieldNames.toSeq ===
+      org.apache.spark.sql.Encoders.product[Event].schema.fieldNames.toSeq)
   }
 }

@@ -370,4 +370,36 @@ class ForgetStoreSpec extends SparkSpec {
       assert(storeIds(dir) === Seq(1L, 2L, 4L, 5L, 7L, 8L))
     } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
   }
+
+  test("forget drain: a throwing forget leg settles the bar leg first and leaves the high-water") {
+    val stateDir = java.nio.file.Files.createTempDirectory("g_drain_state").toString
+    val ids = Seq(10L, 20L).toDF("doc_id")
+    // the bar leg is slower than the failing forget leg: a drain that
+    // propagated the forget failure without awaiting the bar would
+    // return before the bar wrote anything
+    val bar = () => { Thread.sleep(500); CorpusPipeline.barIds(spark, stateDir, ids) }
+    val e = intercept[IllegalStateException] {
+      CorpusPipeline.commitDrain(spark, stateDir, newHw = 7L, bar = bar,
+        forget = () => throw new IllegalStateException("forget leg down"))
+    }
+    assert(e.getMessage === "forget leg down")
+    assert(CorpusPipeline.barredIds(spark, stateDir)
+      .map(_.as[Long].collect().sorted.toSeq) === Some(Seq(10L, 20L)),
+      "the bar leg settled before the failure propagated")
+    def hwFiles = new java.io.File(stateDir).list().filter(_.startsWith("hw"))
+    assert(hwFiles.isEmpty, "the high-water must not move past a failed forget")
+    // both legs failing: the first (forget) failure propagates with the
+    // bar's attached, neither lost; the high-water still stays
+    val both = intercept[IllegalStateException] {
+      CorpusPipeline.commitDrain(spark, stateDir, newHw = 7L,
+        bar = () => throw new java.io.IOException("bar leg down"),
+        forget = () => throw new IllegalStateException("forget leg down"))
+    }
+    assert(both.getSuppressed.map(_.getMessage).toSeq === Seq("bar leg down"))
+    assert(hwFiles.isEmpty)
+    // both legs succeeding: the high-water advances
+    assert(CorpusPipeline.commitDrain(spark, stateDir, newHw = 7L,
+      bar = () => (), forget = () => Seq("source=s1")) === Seq("source=s1"))
+    assert(hwFiles.toSeq === Seq("hw"))
+  }
 }

@@ -183,17 +183,20 @@ class RunnerSpec extends SparkSpec {
   }
 
   test("one refresh per run commit: imports fire 1, exec fires 3") {
+    // a refresh is one store generation (EventStore.commitRun)
     val (runner, store) = mkRunner()
-    val refreshes = new java.util.concurrent.atomic.AtomicInteger(0)
-    store.onAppendRefresh(() => { refreshes.incrementAndGet(); () })
-    def refreshesFor(body: => Unit): Int = { refreshes.set(0); body; refreshes.get() }
-    assert(refreshesFor(runner.importContent(
+    def generationsFor(body: => Unit): Long = {
+      val before = store.snapshot.generation
+      body
+      store.snapshot.generation - before
+    }
+    assert(generationsFor(runner.importContent(
       "src/x.c:1:1: error: e\n", format = "gcc_text")) === 1)
     val dir = Files.createTempDirectory("refresh_logs")
     Files.writeString(dir.resolve("a.log"), "src/a.c:1:1: error: e\n")
-    assert(refreshesFor(runner.importDirectory(s"$dir/*.log")) === 1)
+    assert(generationsFor(runner.importDirectory(s"$dir/*.log")) === 1)
     // attempt, outcome, then the run commit
-    assert(refreshesFor(runner.exec(Seq("sh", "-c",
+    assert(generationsFor(runner.exec(Seq("sh", "-c",
       "echo 'src/b.c:2:1: warning: w'"))) === 3)
   }
 
@@ -226,5 +229,19 @@ class RunnerSpec extends SparkSpec {
     val tools = ev.select(col("tool_name")).distinct()
       .collect().map(_.getString(0)).toSet
     assert(tools === Set("gcc", "mypy"))
+  }
+
+  test("importContent: a driver-side run commits one events file") {
+    val (runner, store) = mkRunner()
+    val log = new String(Files.readAllBytes(java.nio.file.Paths.get(
+      getClass.getResource("/logs/gcc_errors.log").toURI)), "UTF-8")
+    val r = runner.importContent(log, format = "auto")
+    val events = store.events.filter(col("invocation_id") === r.invocationId).count()
+    assert(events >= 4, s"fixture must carry several events, got $events")
+    val dates = new java.io.File(s"${store.root}/events").listFiles()
+      .filter(_.getName.startsWith("date="))
+    assert(dates.length === 1)
+    val parts = dates.head.list().filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
+    assert(parts.length === 1, parts.mkString(", "))
   }
 }

@@ -6,6 +6,11 @@ import graft.api.Serve
 /** Serving-surface dispatch: the MCP-tool mapping over the engine
   * facade (reference serve.py tool registry). */
 class ServeSpec extends SparkSpec {
+  import graft.store.EventStore
+
+  /** Jobs one agent session runs on the Fixtures store, as measured
+    * (77 before reads used one declared-schema snapshot). */
+  private val SessionJobs = 35
 
   private def mkServe(): Serve = {
     val g = GraftEngine(spark, Files.createTempDirectory("serve").toString)
@@ -138,7 +143,7 @@ class ServeSpec extends SparkSpec {
     assert(s.call("report").contains("#"))
     val out = s.call("sql", Map(
       "q" -> "SELECT count(*) AS n FROM blq_events WHERE severity = 'error'"))
-    assert(out.contains("\"n\": 3") || out.contains("\"n\":3"))
+    assert(out.contains("\"n\": 3") || out.contains("\"n\": 3"))
   }
 
   test("import tool: glob path dispatches the distributed ingest") {
@@ -687,5 +692,99 @@ class ServeSpec extends SparkSpec {
       spark.sql("DROP TABLE IF EXISTS g_srv_idx")
       spark.sql("DROP TABLE IF EXISTS g_srv_fresh")
     }
+  }
+
+  /** A Serve over the Fixtures store (runs 1..3 on two dates, a
+    * pending attempt), plus the import log the sessions below use. */
+  private def fixtureServe(tag: String): (GraftEngine, Serve, String) = {
+    val root = Files.createTempDirectory(tag).toString
+    val g = GraftEngine(spark, root)
+    Fixtures.populate(g.store)
+    val log = Files.createTempFile(tag, ".log")
+    Files.writeString(log,
+      "src/a.c:1:1: error: first thing\nsrc/b.c:2:2: warning: second thing\n" +
+        "src/c.c:3:3: error: third thing\n")
+    (g, new Serve(g), log.toString)
+  }
+
+  private def reply(s: Serve, tool: String, args: (String, String)*): String = {
+    val r = s.call(tool, args.toMap)
+    assert(!r.startsWith("{\"error\""), s"$tool: $r")
+    r
+  }
+
+  test("one agent session (import + the 8 read tools) runs a pinned number of jobs") {
+    val (_, s, log) = fixtureServe("serve_jobs")
+    def session(): Unit = {
+      reply(s, "import", "path" -> log)
+      reply(s, "errors", "limit" -> "10")
+      reply(s, "events", "ref" -> "~1", "limit" -> "50")
+      reply(s, "diff", "run1" -> "3", "run2" -> "4")
+      reply(s, "ci_check", "baseline" -> "3", "candidate" -> "4")
+      reply(s, "info", "ref" -> "~1")
+      reply(s, "query", "filter" -> "severity=error", "limit" -> "20")
+      reply(s, "sql", "q" -> "SELECT severity, count(*) AS n FROM blq_events GROUP BY severity", "limit" -> "50")
+      reply(s, "history", "limit" -> "10")
+    }
+    val jobs = jobsFor(session())
+    // no schema-merge job per table read, no re-registration per sql
+    // call, no serial aggregate once the snapshot knows the max
+    assert(jobs <= SessionJobs, s"one session ran $jobs jobs")
+  }
+
+  test("snapshot: a foreign writer and an external delete reach the next call; concurrent reads never throw") {
+    val (g, a, log) = fixtureServe("serve_foreign")
+    def history = reply(a, "history", "limit" -> "10")
+    def sqlCount(t: String) = reply(a, "sql", "q" -> s"SELECT count(*) AS n FROM $t")
+    assert(history.split("run_serial").length - 1 === 3)
+    assert(reply(a, "events", "ref" -> "~1") === "[]") // run 3 has no events
+    assert(sqlCount("events_raw").contains("\"n\": 5"))
+
+    // a second EventStore on the root commits run 4 into the existing
+    // 2026-08-02 partitions; the 2026-08-01 events are removed from
+    // outside the engine
+    val b = new EventStore(spark, g.root)
+    b.commitRun(Fixtures.inv("i4", b.nextRunSerial(), Some("build"),
+        "2026-08-02 13:00:00", Some(1), date = Fixtures.d2),
+      Some(spark.createDataFrame(Seq(Fixtures.ev("e6", "i4", 0, "error",
+        "foreign boom", date = Fixtures.d2)))))
+    org.apache.commons.io.FileUtils.deleteDirectory(
+      new java.io.File(s"${g.root}/events/date=2026-08-01"))
+
+    assert(history.split("run_serial").length - 1 === 4)
+    assert(reply(a, "events", "ref" -> "~1").contains("foreign boom"))
+    assert(sqlCount("events_raw").contains("\"n\": 3"))
+    assert(sqlCount("blq_events").contains("\"n\": 3"))
+    assert(reply(a, "info", "ref" -> "1").contains("\"event_count\": 0"))
+    assert(g.store.nextRunSerial() === 5L)
+
+    // read tools on 4 threads while this engine commits runs
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(5)
+    try {
+      val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+      val writer = pool.submit(new java.util.concurrent.Callable[Unit] {
+        def call(): Unit =
+          try (1 to 3).foreach(_ => reply(a, "import", "path" -> log))
+          finally done.set(true)
+      })
+      val readers = (0 until 4).map { i =>
+        pool.submit(new java.util.concurrent.Callable[Int] {
+          def call(): Int = {
+            val tools = Seq[() => String](
+              () => reply(a, "history", "limit" -> "5"),
+              () => reply(a, "events", "ref" -> "~1"),
+              () => reply(a, "sql", "q" -> "SELECT count(*) AS n FROM blq_runs"),
+              () => reply(a, "errors", "limit" -> "5"))
+            var n = 0
+            while (!done.get() || n < 4) { tools((i + n) % tools.size)(); n += 1 }
+            n
+          }
+        })
+      }
+      writer.get(5, java.util.concurrent.TimeUnit.MINUTES)
+      readers.foreach(r => assert(r.get(5, java.util.concurrent.TimeUnit.MINUTES) >= 4))
+    } finally pool.shutdown()
+    assert(history.split("run_serial").length - 1 === 7)
+    assert(g.store.nextRunSerial() === 8L)
   }
 }
