@@ -75,6 +75,14 @@ final class GraftEngine private (val spark: SparkSession, val root: String) {
   def status(): DataFrame = analytics.sourceStatus()
   def diff(r1: Long, r2: Long): DataFrame = analytics.diff(r1, r2)
   def run(ref: String): DataFrame = RefResolver.resolveRun(runs, ref)
+
+  /** The invocation row a ref names, resolved against the invocations
+    * dimension alone (`id` as `invocation_id`): [[run]] without the
+    * per-run event rollup, for callers that need only the run's id or
+    * date. */
+  def invocation(ref: String): DataFrame =
+    RefResolver.resolveRun(store.invocations.withColumnRenamed("id", "invocation_id"), ref)
+
   def query: LogQuery = LogQuery(events)
 
   /** Captured output body of a run (O5 head/tail source). */

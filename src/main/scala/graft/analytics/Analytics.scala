@@ -131,12 +131,16 @@ final class Analytics(store: EventStore) {
       .select(col("id"), col("date")).collect()
     run.headOption match {
       case None => s.events.limit(0)
-      case Some(r) =>
-        s.events
-          .filter(col("date") === r.getDate(1))       // partition prune
-          .filter(col("invocation_id") === r.getString(0))
+      case Some(r) => eventsForRun(r.getString(0), r.getDate(1))
     }
   }
+
+  /** All events of the run `invocationId`, whose invocation row has
+    * partition `date`: for a caller that has already resolved the run. */
+  def eventsForRun(invocationId: String, date: java.sql.Date): DataFrame =
+    store.events
+      .filter(col("date") === date)                   // partition prune
+      .filter(col("invocation_id") === invocationId)
 
   /** The service-level parameterized event query (services/query.py:
     * 233-326 semantics): severity IN-list (P6), fingerprint

@@ -143,10 +143,11 @@ final class Serve(private[api] val engine: GraftEngine) {
     case "events" =>
       // default = most recent run ("~1"); a "-1" literal would parse as
       // run_serial -1, which can never match
-      engine.run(args.getOrElse("ref", "~1")).select("run_serial")
+      engine.invocation(args.getOrElse("ref", "~1")).select("invocation_id", "date")
         .collect().headOption match {
         case Some(row) =>
-          json(engine.analytics.eventsForRun(row.getLong(0)), intArg(args, "limit", 100))
+          json(engine.analytics.eventsForRun(row.getString(0), row.getDate(1)),
+            intArg(args, "limit", 100))
         case None => err(s"no run matches ref '${args.getOrElse("ref", "~1")}'")
       }
     case "errors" =>
@@ -270,7 +271,7 @@ final class Serve(private[api] val engine: GraftEngine) {
         case None => err(s"ref '$ref' has no event index (use run:serial:event)")
         case Some(eventId) =>
           import org.apache.spark.sql.functions.col
-          val run = engine.run(ref).select("invocation_id").collect().headOption
+          val run = engine.invocation(ref).select("invocation_id").collect().headOption
           run match {
             case None => err(s"no run matches ref '$ref'")
             case Some(row) =>
@@ -604,7 +605,7 @@ final class Serve(private[api] val engine: GraftEngine) {
     RefResolver.parse(ref).eventId match {
       case None => Left(s"ref '$ref' has no event index (use run:serial:event)")
       case Some(eventId) =>
-        engine.run(ref).select("invocation_id").collect().headOption match {
+        engine.invocation(ref).select("invocation_id").collect().headOption match {
           case None => Left(s"no run matches ref '$ref'")
           case Some(runRow) =>
             val inv = runRow.getString(0)

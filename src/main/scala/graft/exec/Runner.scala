@@ -6,7 +6,6 @@ import java.sql.{Date, Timestamp}
 import java.util.UUID
 import java.util.concurrent.TimeUnit
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.BlqFunctions
 import graft.model._
@@ -20,7 +19,9 @@ import graft.store.{BlobStore, EventStore}
   * captured output to the blob store.
   *
   * Driver-side by design — the measured subprocess is inherently
-  * local; only the parsed events enter Spark. The two-phase write
+  * local, and so is its commit: the parsed events become `Event` rows
+  * on the driver and the store writes them there, with no Spark job
+  * ([[importDirectory]] is the distributed path). The two-phase write
   * (attempt before outcome) preserves the reference's
   * status-from-absence semantics: a crash between the phases leaves a
   * pending attempt that Maintenance.reconcileOrphans later marks
@@ -120,7 +121,7 @@ final class Runner(store: EventStore, blobs: BlobStore,
       hostname = Some(hostname),
       platform = Some(sys.props.getOrElse("os.name", "unknown")),
       arch = Some(sys.props.getOrElse("os.arch", "unknown")))
-    commit(inv, eventFrame(attemptId, started, parsed), tally(parsed),
+    commit(inv, eventRows(attemptId, started, parsed), tally(parsed),
       Some(output), durationMs, timedOut)
   }
 
@@ -135,7 +136,7 @@ final class Runner(store: EventStore, blobs: BlobStore,
     val parsed = FormatRegistry.parse(content, format)
     commit(invocation(id, started, contextFor(None, context), sourceName,
         sourceType, tag, command = None),
-      eventFrame(id, started, parsed), tally(parsed), Some(content), 0L)
+      eventRows(id, started, parsed), tally(parsed), Some(content), 0L)
   }
 
   /** Distributed bulk ingest (S4 at scale): a directory/glob of log
@@ -146,6 +147,11 @@ final class Runner(store: EventStore, blobs: BlobStore,
     * single captured blob. The batch is one invocation (source_type
     * "import", command = the glob); each event keeps its origin file in
     * metadata JSON (`{"log_file": …}`), queryable via json_extract.
+    *
+    * The parse runs at the scan's parallelism and is persisted by the
+    * tally; the write then reads the cached blocks coalesced to one
+    * partition per `spark.sql.files.maxPartitionBytes` of input, so a
+    * small directory commits one events file, not one per scan split.
     *
     * At 100 TB of logs this shape is embarrassingly parallel: no
     * shuffle anywhere — the only synchronization is the final count. */
@@ -167,9 +173,17 @@ final class Runner(store: EventStore, blobs: BlobStore,
         count(when(col("severity") === Severity.Error, 1)).as("e"),
         count(when(col("severity") === Severity.Warning, 1)).as("w"))
         .head()
+      // the scan's listing already knows the input size: its leaf stats.
+      // A coalesce never raises the partition count, so the scan's is
+      // the upper clamp.
+      val inputBytes = parsed.queryExecution.analyzed.collectLeaves()
+        .map(_.stats.sizeInBytes).sum
+      val maxBytes = store.spark.sessionState.conf.filesMaxPartitionBytes
+      val files = ((inputBytes + maxBytes - 1) / maxBytes).max(1).toInt
       commit(invocation(id, started, contextFor(None, context), Some(pathGlob),
           SourceType.Import, tag, Some(s"import $pathGlob")),
-        Some(parsed), (tallies.getLong(0), tallies.getLong(1)), output = None,
+        EventStore.EventFrame(parsed.coalesce(files)),
+        (tallies.getLong(0), tallies.getLong(1)), output = None,
         System.currentTimeMillis() - started.getTime)
     } finally parsed.unpersist()
   }
@@ -199,7 +213,7 @@ final class Runner(store: EventStore, blobs: BlobStore,
     * has no exit code; it gets a synthetic one mirroring the tally.
     * `durationMs` is read after the commit (a bulk import reports its
     * wall time including the write). */
-  private def commit(inv: Invocation, events: Option[DataFrame],
+  private def commit(inv: Invocation, events: EventStore.RunEvents,
       tally: (Long, Long), output: Option[String], durationMs: => Long,
       timedOut: Boolean = false): RunResult = {
     val (errors, warnings) = tally
@@ -234,26 +248,28 @@ final class Runner(store: EventStore, blobs: BlobStore,
       date = dateOf(started))
   }
 
-  /** Parsed events → fingerprinted event rows; None when nothing parsed.
-    * The rows already sit in driver memory, so the frame is one
-    * partition: the run commits as one events file, not one per local
-    * scan slice. */
-  private def eventFrame(invocationId: String, started: Timestamp,
-      parsed: Seq[graft.parse.ParsedEvent]): Option[DataFrame] =
-    Option.when(parsed.nonEmpty) {
-      val spark = store.spark
-      import spark.implicits._
-      parsed.toDS().toDF()
-        .withColumn("id", expr("uuid()"))
-        .withColumn("invocation_id", lit(invocationId))
-        .withColumn("timestamp", lit(started))
-        .withColumn("fingerprint",
-          when(col("severity").isin("error", "warning", "test_fail"),
-            BlqFunctions.fingerprint(col("tool_name"), col("category"),
-              col("code"), col("ref_file"), col("message"))))
-        .withColumn("context", lit(null).cast("string"))
-        .withColumn("metadata", lit(null).cast("string"))
-        .withColumn("date", lit(dateOf(started)))
-        .coalesce(1)
-    }
+  /** Parsed events → the run's fingerprinted `Event` rows, built on the
+    * driver where the parse left them: a fresh UUID per row, the run's
+    * start as timestamp and date, and [[BlqFunctions.fingerprintOf]] —
+    * the driver form of the fingerprint column [[importDirectory]]'s
+    * parse computes — on errors, warnings and test failures. No frame is
+    * built, so the commit plans nothing and runs no job. */
+  private def eventRows(invocationId: String, started: Timestamp,
+      parsed: Seq[graft.parse.ParsedEvent]): EventStore.RunEvents = {
+    val date = dateOf(started)
+    EventStore.EventRows(parsed.map { p =>
+      Event(
+        id = UUID.randomUUID().toString, invocation_id = invocationId,
+        event_index = p.event_index, timestamp = started,
+        severity = p.severity, message = p.message, raw_text = p.raw_text,
+        tool_name = p.tool_name, category = p.category, code = p.code,
+        rule = p.rule, test_name = p.test_name, ref_file = p.ref_file,
+        ref_line = p.ref_line, ref_column = p.ref_column,
+        fingerprint = Option.when(BlqFunctions.FingerprintedSeverities.contains(p.severity))(
+          BlqFunctions.fingerprintOf(p.tool_name, p.category, p.code,
+            p.ref_file, p.message)),
+        log_line_start = p.log_line_start, log_line_end = p.log_line_end,
+        context = None, metadata = None, date = date)
+    })
+  }
 }

@@ -1,7 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The reference's scalar SQL macro library (F1, SURVEY.md §2.10) as
   * Catalyst-visible Column expressions — no UDFs, so everything is
@@ -61,8 +63,8 @@ object BlqFunctions {
   def fingerprint(tool: Column, category: Column, code: Column,
       refFile: Column, message: Column): Column = {
     val template = regexp_replace(
-      regexp_replace(coalesce(message, lit("")), "0x[0-9a-fA-F]+", "<hex>"),
-      "[0-9]+", "<n>")
+      regexp_replace(coalesce(message, lit("")), HexRun, "<hex>"),
+      DigitRun, "<n>")
     concat(
       coalesce(tool, lit("unknown")), lit("_"),
       coalesce(category, lit("general")), lit("_"),
@@ -70,6 +72,34 @@ object BlqFunctions {
         coalesce(tool, lit("")), coalesce(category, lit("")),
         coalesce(code, lit("")), coalesce(refFile, lit("")), template))))
   }
+
+  /** [[fingerprint]] evaluated on the driver, bit-identical to the
+    * Column form: the same two regex normalisations of the message,
+    * `xxhash64`'s seed-42 chain over the five coalesced fields' UTF-8
+    * bytes, and `lower(hex(…))` of the 64-bit result, which is the
+    * unsigned hex `Long.toHexString` prints. For rows already in driver
+    * memory, where a Catalyst projection would cost more than the hash. */
+  def fingerprintOf(tool: Option[String], category: Option[String],
+      code: Option[String], refFile: Option[String],
+      message: Option[String]): String = {
+    val template = DigitRunPattern.matcher(
+      HexRunPattern.matcher(message.getOrElse("")).replaceAll("<hex>"))
+      .replaceAll("<n>")
+    val hash = Seq(tool, category, code, refFile, Some(template))
+      .foldLeft(42L) { (seed, field) =>
+        XXH64.hashUTF8String(UTF8String.fromString(field.getOrElse("")), seed)
+      }
+    s"${tool.getOrElse("unknown")}_${category.getOrElse("general")}_" +
+      java.lang.Long.toHexString(hash)
+  }
+
+  /** Severities that carry a fingerprint; every other event's is null. */
+  val FingerprintedSeverities: Seq[String] = Seq("error", "warning", "test_fail")
+
+  private val HexRun = "0x[0-9a-fA-F]+"
+  private val DigitRun = "[0-9]+"
+  private val HexRunPattern = java.util.regex.Pattern.compile(HexRun)
+  private val DigitRunPattern = java.util.regex.Pattern.compile(DigitRun)
 
   /** Millisecond duration → compact human age ("3d 4h", "2h 5m", "12s";
     * output.py:20-86 semantics, normalized to ms internally per

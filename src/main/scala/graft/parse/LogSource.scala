@@ -19,7 +19,7 @@ object LogSource {
   /** Columns of a parsed-events DataFrame, pre-context-join. */
   private def finish(df: DataFrame): DataFrame =
     df.withColumn("fingerprint",
-      when(col("severity").isin("error", "warning", "test_fail"),
+      when(col("severity").isin(BlqFunctions.FingerprintedSeverities: _*),
         BlqFunctions.fingerprint(col("tool_name"), col("category"),
           col("code"), col("ref_file"), col("message"))))
 

@@ -1,8 +1,16 @@
 package graft.store
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SaveMode, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.spark.sql.{DataFrame, Encoder, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.catalyst.encoders.encoderFor
+import org.apache.spark.sql.catalyst.expressions.{Cast, UnsafeProjection}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{StringType, StructType}
 import graft.model._
 
 /** One immutable read generation of an [[EventStore]]: the five
@@ -84,10 +92,28 @@ object StoreSnapshot {
   *    raw reads of stores written under an older schema;
   *  - reads are served from one [[StoreSnapshot]] per commit
   *    generation (contract on [[commitRun]]).
+  *
+  * Write path. Two writers, chosen by where the rows already are:
+  *  - rows in driver memory — a run's invocation and output rows,
+  *    attempts and outcomes (`Maintenance.reconcileOrphans`' too), and
+  *    a driver-side run's parsed events — are encoded by the model
+  *    encoder and written on the driver by Spark's own parquet
+  *    `OutputWriter`, one file per date partition: no Spark job, no
+  *    Catalyst plan;
+  *  - frames (`Runner.importDirectory`, the live stream's micro-batches
+  *    through [[appendEvents]]) keep the distributed writer.
+  * Both produce the same files: the parquet schema, zstd codec and
+  * Spark row metadata of a Spark job's output, at
+  * `date=…/part-….zstd.parquet`. A driver file is written under a
+  * hidden in-progress name (`.part-….inprogress`, which Spark's
+  * listing, maintenance and a `*.parquet` glob all skip) and renamed
+  * into place once closed. No `recacheByPath` is needed after either
+  * write: a reader holds an immutable snapshot, and the next
+  * generation is a new read with a new listing.
   */
 class EventStore(val spark: SparkSession, val root: String) {
   import spark.implicits._
-  import EventStore.TableNames
+  import EventStore.{TableNames, WriteOptions}
   import StoreSnapshot.{Signature, Table}
 
   private def path(table: String) = s"$root/$table"
@@ -138,7 +164,7 @@ class EventStore(val spark: SparkSession, val root: String) {
   @volatile private var views: Option[StoreSnapshot => Unit] = None
 
   private def signature(table: String): Signature = {
-    val p = new org.apache.hadoop.fs.Path(path(table))
+    val p = new Path(path(table))
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     try Some(fs.listStatus(p).iterator
       .map(s => s.getPath.getName -> s.getModificationTime)
@@ -209,52 +235,95 @@ class EventStore(val spark: SparkSession, val root: String) {
     * the run serial and cached invocation dates with them. */
   def invalidate(): Unit = { advance(TableNames, None); () }
 
-  // ---- write path (S9/S10) -------------------------------------------
+  // ---- write path (S9/S10; the two writers are on the class doc) -------
 
-  private def writer[T](ds: Dataset[T], cols: Seq[String]) =
-    ds.write.mode(SaveMode.Append)
-      .option("compression", "zstd")
-      .partitionBy(cols: _*)
+  /** Append rows already in driver memory to `table`, with no Spark job.
+    * Each date partition is one file, written by `ParquetFileFormat`'s
+    * `OutputWriter` with the session's Hadoop conf, under its in-progress
+    * name first. The partition directory is named from the encoded date,
+    * by the cast to string Spark's writer applies. */
+  private def appendRows[T: Encoder](table: String, rows: Seq[T]): Unit =
+    if (rows.nonEmpty) {
+      val encoder = encoderFor[T]
+      val toRow = encoder.createSerializer()
+      val attrs = DataTypeUtils.toAttributes(encoder.schema)
+      val (partCols, dataCols) = attrs.partition(_.name == "date")
+      val dataSchema = DataTypeUtils.fromAttributes(dataCols)
+      val dataRow = UnsafeProjection.create(dataCols, attrs)
+      val partDir = UnsafeProjection.create(Seq(Cast(partCols.head, StringType,
+        Some(spark.sessionState.conf.sessionLocalTimeZone))), attrs)
+      val job = Job.getInstance(spark.sessionState.newHadoopConfWithOptions(WriteOptions))
+      val writers = new ParquetFileFormat().prepareWrite(spark, job, WriteOptions, dataSchema)
+      val task = new TaskAttemptContextImpl(job.getConfiguration,
+        new TaskAttemptID(new TaskID(new JobID("graft", 0), TaskType.MAP, 0), 0))
+      val fileName =
+        s"part-00000-${java.util.UUID.randomUUID()}.c000${writers.getFileExtension(task)}"
+      val fs = new Path(path(table)).getFileSystem(job.getConfiguration)
+      val encoded = rows.map(r => toRow(r).copy())
+      encoded.groupBy(r => partDir(r).getUTF8String(0).toString).foreach {
+        case (date, part) =>
+          val dir = new Path(path(table),
+            ExternalCatalogUtils.getPartitionPathString("date", date))
+          val inProgress = new Path(dir, EventStore.inProgressName(fileName))
+          try {
+            val out = writers.newInstance(inProgress.toString, dataSchema, task)
+            try part.foreach(r => out.write(dataRow(r)))
+            finally out.close()
+            if (!fs.rename(inProgress, new Path(dir, fileName)))
+              throw new java.io.IOException(s"could not rename $inProgress into place")
+          } catch {
+            case e: Throwable => fs.delete(inProgress, false); throw e
+          }
+      }
+    }
 
   def appendAttempts(attempts: Seq[Attempt]): Unit = {
-    writer(attempts.toDS(), Seq("date")).parquet(path("attempts"))
+    appendRows("attempts", attempts)
     advance(Seq("attempts"), None)
   }
 
   def appendOutcomes(outcomes: Seq[Outcome]): Unit = {
-    writer(outcomes.toDS(), Seq("date")).parquet(path("outcomes"))
+    appendRows("outcomes", outcomes)
     advance(Seq("outcomes"), None)
   }
 
   /** Write-side clustering for event files: sorted by (date, severity,
-    * timestamp) within each task partition. The date prefix lets
+    * timestamp) within each file. The date prefix lets
     * FileFormatWriter skip its own partition-column sort; the
     * (severity, timestamp) suffix is the ART-index substitute SURVEY §4
     * names — each parquet row group carries tight min/max stats on the
     * two most-filtered columns (P6 severity IN-lists, P9 recency), so
     * a `severity = 'error'` scan skips clean row groups outright
     * instead of decoding them. A local per-partition sort: no shuffle,
-    * negligible against parse+write cost at any batch size.
+    * negligible against parse+write cost at any batch size. Driver
+    * rows get the same order by a stable sort (date is their
+    * partition).
     *
-    * Input is aligned to the canonical Event schema first — missing
+    * A frame is aligned to the canonical Event schema first — missing
     * columns become typed nulls, present ones are cast — so an ad-hoc
     * frame (e.g. a VOID-typed null literal) can never poison the
     * store's parquet schema. */
-  private def writeEvents(df: DataFrame): Unit = {
-    val aligned = df.select(schemas("events").fields.map { f =>
-      if (df.columns.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
-      else lit(null).cast(f.dataType).as(f.name)
-    }.toSeq: _*)
-    writer(aligned.as[Event]
-      .sortWithinPartitions(col("date"), col("severity"), col("timestamp")),
-      Seq("date")).parquet(path("events"))
+  private def writeEvents(events: EventStore.RunEvents): Unit = events match {
+    case EventStore.EventRows(rows) =>
+      appendRows("events",
+        rows.sortBy(e => (e.severity, e.timestamp.getTime, e.timestamp.getNanos)))
+    case EventStore.EventFrame(df) =>
+      val aligned = df.select(schemas("events").fields.map { f =>
+        if (df.columns.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
+        else lit(null).cast(f.dataType).as(f.name)
+      }.toSeq: _*)
+      aligned.as[Event]
+        .sortWithinPartitions(col("date"), col("severity"), col("timestamp"))
+        .write.mode(SaveMode.Append).options(WriteOptions).partitionBy("date")
+        .parquet(path("events"))
   }
 
   /** Commit one completed run — the store's single run-commit path.
-    * Writes the run's events, then its output rows, then its
-    * invocation row LAST: a crash mid-commit leaves dangling,
-    * joined-away events, never a committed run row claiming zero
-    * events. Caller assigns run_serial via [[nextRunSerial]].
+    * Writes the run's events (driver rows or a frame, see the write
+    * path above), then its output rows, then its invocation row LAST: a
+    * crash mid-commit leaves dangling, joined-away events, never a
+    * committed run row claiming zero events. Caller assigns run_serial
+    * via [[nextRunSerial]].
     *
     * Snapshot contract. Every read ([[events]], [[invocations]], …,
     * the `Views`, `Analytics`, `Serve` and the registered SQL views)
@@ -269,21 +338,21 @@ class EventStore(val spark: SparkSession, val root: String) {
     * run serial advances in place on this engine's commits. Installed
     * SQL views are re-registered on every advance, so raw `spark.sql`
     * sees the new run without a further call. */
-  def commitRun(inv: Invocation, events: Option[DataFrame] = None,
+  def commitRun(inv: Invocation,
+      events: EventStore.RunEvents = EventStore.EventRows(Nil),
       outputs: Seq[Output] = Nil): Unit = {
-    events.foreach(writeEvents)
-    if (outputs.nonEmpty)
-      writer(outputs.toDS(), Seq("date")).parquet(path("outputs"))
-    writer(Seq(inv).toDS(), Seq("date")).parquet(path("invocations"))
+    writeEvents(events)
+    appendRows("outputs", outputs)
+    appendRows("invocations", Seq(inv))
     invDates.put(inv.id, inv.date.toString)
-    advance(Seq("invocations") ++ events.map(_ => "events") ++
+    advance(Seq("invocations") ++ Option.when(events.nonEmpty)("events") ++
       Option.when(outputs.nonEmpty)("outputs"), Some(inv.run_serial))
   }
 
   /** Standalone event append for frames outside a run commit (the live
     * stream's micro-batches); advances the generation like a commit. */
   def appendEvents(df: DataFrame): Unit = {
-    writeEvents(df)
+    writeEvents(EventStore.EventFrame(df))
     advance(Seq("events"), None)
   }
 
@@ -319,7 +388,7 @@ class EventStore(val spark: SparkSession, val root: String) {
     * (plain parquet has no row deletes; SURVEY.md §7.4 risk 3). */
   def prunablePartitions(table: String, days: Int): Seq[String] = {
     val cutoff = java.time.LocalDate.now().minusDays(days.toLong)
-    val p = new org.apache.hadoop.fs.Path(path(table))
+    val p = new Path(path(table))
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) Seq.empty
     else fs.listStatus(p).toSeq
@@ -335,4 +404,22 @@ class EventStore(val spark: SparkSession, val root: String) {
 object EventStore {
   private val TableNames: Seq[String] =
     Seq("events", "invocations", "attempts", "outcomes", "outputs")
+
+  private val WriteOptions = Map("compression" -> "zstd")
+
+  /** A run's events as [[EventStore.commitRun]] takes them. */
+  sealed trait RunEvents { def nonEmpty: Boolean }
+  /** Rows already in driver memory: written with no Spark job. */
+  final case class EventRows(rows: Seq[Event]) extends RunEvents {
+    def nonEmpty: Boolean = rows.nonEmpty
+  }
+  /** A frame: appended by the distributed writer. */
+  final case class EventFrame(df: DataFrame) extends RunEvents {
+    def nonEmpty: Boolean = true
+  }
+
+  /** Hidden name a driver-written file has until it is complete and
+    * renamed to `fileName`: Spark's listing skips names starting with
+    * `.`, and it does not end in `.parquet`. */
+  private[graft] def inProgressName(fileName: String): String = s".$fileName.inprogress"
 }

@@ -17,7 +17,7 @@ class AnalyticsSpec extends SparkSpec {
     val root = Files.createTempDirectory("analytics_store").toString
     val s = new EventStore(spark, root)
     s.commitRun(inv("i1", 1L, Some("build"), "2026-08-01 10:00:00", Some(1)),
-      Some(spark.createDataFrame(Seq(
+      EventStore.EventFrame(spark.createDataFrame(Seq(
         ev("e1", "i1", 0, "error", "undefined variable spam",
           file = Some("a.c"), line = Some(10), fp = Some("fp_spam")),
         ev("e2", "i1", 1, "error", "missing include guard",
@@ -25,7 +25,7 @@ class AnalyticsSpec extends SparkSpec {
         ev("e3", "i1", 2, "warning", "unused parameter x",
           file = Some("b.c"), line = Some(5), fp = Some("fp_unused"))))))
     s.commitRun(inv("i2", 2L, Some("build"), "2026-08-01 11:00:00", Some(1)),
-      Some(spark.createDataFrame(Seq(
+      EventStore.EventFrame(spark.createDataFrame(Seq(
         ev("e4", "i2", 0, "error", "undefined variable spam",
           file = Some("a.c"), line = Some(10), fp = Some("fp_spam")),
         ev("e5", "i2", 1, "error", "new null deref",
@@ -120,7 +120,7 @@ class AnalyticsSpec extends SparkSpec {
         fp = Some("fp_steady"))
       s.commitRun(inv(s"r$serial", serial, Some("build"),
         s"2026-08-01 0$serial:00:00", Some(1)),
-        Some(spark.createDataFrame(evs.result())))
+        EventStore.EventFrame(spark.createDataFrame(evs.result())))
     }
     val h = new Analytics(s).fingerprintHistory().collect()
       .map(r => r.getAs[String]("fingerprint") ->

@@ -41,7 +41,7 @@ object Drive extends App {
     lit(java.sql.Date.valueOf("2026-08-03")).as("date"))
   // One commit: events, then the invocation row; the views registered
   // above refresh themselves once the run is committed.
-  store.commitRun(inv, Some(events))
+  store.commitRun(inv, EventStore.EventFrame(events))
   spark.sql("SELECT ref, location, message FROM blq_events WHERE severity='error' AND tool_name='gcc' ORDER BY event_index LIMIT 10").show(false)
 
   // Fluent API + CLI filter mini-language surface.

@@ -42,7 +42,7 @@ object Fixtures {
   def populate(store: EventStore): Unit = {
     store.commitRun(
       inv("i1", 1L, Some("build"), "2026-08-01 10:00:00", Some(1)),
-      Some(store.spark.createDataFrame(Seq(
+      EventStore.EventFrame(store.spark.createDataFrame(Seq(
         ev("e1", "i1", 0, Severity.Error, "undefined reference to `foo`",
           Some("src/main.c"), Some(15), Some("gcc_compile_f1")),
         ev("e2", "i1", 1, Severity.Error, "expected ';' before '}'",
@@ -51,7 +51,7 @@ object Fixtures {
           Some("src/main.c"), Some(20), Some("gcc_compile_f3"))))))
     store.commitRun(
       inv("i2", 2L, Some("build"), "2026-08-02 11:00:00", Some(1), date = d2),
-      Some(store.spark.createDataFrame(Seq(
+      EventStore.EventFrame(store.spark.createDataFrame(Seq(
         ev("e4", "i2", 0, Severity.Error, "expected ';' before '}'",
           Some("src/util.c"), Some(3), Some("gcc_compile_f2"), date = d2),
         ev("e5", "i2", 1, Severity.Error, "implicit declaration of `bar`",
@@ -184,11 +184,11 @@ class EngineSpec extends SparkSpec {
     val root = java.nio.file.Files.createTempDirectory("fresh_store").toString
     val s2 = new graft.store.EventStore(spark, root)
     s2.commitRun(Fixtures.inv("fa", 1L, Some("t"), "2026-08-01 10:00:00", Some(0)),
-      Some(spark.createDataFrame(Seq(Fixtures.ev("fe1", "fa", 0, "error", "one")))))
+      EventStore.EventFrame(spark.createDataFrame(Seq(Fixtures.ev("fe1", "fa", 0, "error", "one")))))
     Views.registerAll(s2)
     assert(spark.sql("SELECT count(*) FROM events_raw").head().getLong(0) === 1L)
     s2.commitRun(Fixtures.inv("fb", 2L, Some("t"), "2026-08-01 11:00:00", Some(1)),
-      Some(spark.createDataFrame(Seq(Fixtures.ev("fe2", "fb", 0, "error", "two"),
+      EventStore.EventFrame(spark.createDataFrame(Seq(Fixtures.ev("fe2", "fb", 0, "error", "two"),
         Fixtures.ev("fe3", "fb", 1, "warning", "three")))))
     assert(spark.sql("SELECT count(*) FROM events_raw").head().getLong(0) === 3L)
     assert(spark.sql("SELECT count(*) FROM blq_events").head().getLong(0) === 3L)

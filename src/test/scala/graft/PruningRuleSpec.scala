@@ -42,9 +42,9 @@ class PruningRuleSpec extends SparkSpec {
       val root = java.nio.file.Files.createTempDirectory("prune_store").toString
       val store = new EventStore(s2, root)
       store.commitRun(mkInv("inv-a", 1, "2026-08-01"),
-        Some(s2.createDataFrame((0L until 3L).map(i => mkEvent("inv-a", i, "2026-08-01")))))
+        EventStore.EventFrame(s2.createDataFrame((0L until 3L).map(i => mkEvent("inv-a", i, "2026-08-01")))))
       store.commitRun(mkInv("inv-b", 2, "2026-08-02"),
-        Some(s2.createDataFrame((0L until 2L).map(i => mkEvent("inv-b", i, "2026-08-02")))))
+        EventStore.EventFrame(s2.createDataFrame((0L until 2L).map(i => mkEvent("inv-b", i, "2026-08-02")))))
 
       val q = store.events.filter(col("invocation_id") === "inv-b")
       // logical: the rule added the date conjunct
@@ -77,7 +77,7 @@ class PruningRuleSpec extends SparkSpec {
 
       // appended runs are visible without reloading the store
       store.commitRun(mkInv("inv-c", 3, "2026-08-03"),
-        Some(s2.createDataFrame(Seq(mkEvent("inv-c", 0, "2026-08-03")))))
+        EventStore.EventFrame(s2.createDataFrame(Seq(mkEvent("inv-c", 0, "2026-08-03")))))
       val q5 = store.events.filter(col("invocation_id") === "inv-c")
       assert(q5.queryExecution.optimizedPlan.toString.contains("2026-08-03"))
       assert(q5.count() === 1L)

@@ -244,4 +244,14 @@ class RunnerSpec extends SparkSpec {
     val parts = dates.head.list().filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
     assert(parts.length === 1, parts.mkString(", "))
   }
+
+  test("importContent: a driver-side run commit runs no Spark job") {
+    val (runner, store) = mkRunner()
+    val log = new String(Files.readAllBytes(java.nio.file.Paths.get(
+      getClass.getResource("/logs/gcc_errors.log").toURI)), "UTF-8")
+    // the first commit into an empty store and one onto a committed run
+    assert(jobsFor(runner.importContent(log)) === 0)
+    assert(jobsFor(runner.importContent(log)) === 0)
+    assert(store.invocations.count() === 2)
+  }
 }

@@ -9,8 +9,9 @@ class ServeSpec extends SparkSpec {
   import graft.store.EventStore
 
   /** Jobs one agent session runs on the Fixtures store, as measured
-    * (77 before reads used one declared-schema snapshot). */
-  private val SessionJobs = 35
+    * (77 before reads used one declared-schema snapshot, 35 before the
+    * import committed driver rows and `events` resolved its ref once). */
+  private val SessionJobs = 31
 
   private def mkServe(): Serve = {
     val g = GraftEngine(spark, Files.createTempDirectory("serve").toString)
@@ -732,6 +733,28 @@ class ServeSpec extends SparkSpec {
     assert(jobs <= SessionJobs, s"one session ran $jobs jobs")
   }
 
+  test("events tool: a ref resolved once against the invocations dimension gives the rollup route's replies") {
+    val (g, s, log) = fixtureServe("serve_refs")
+    reply(s, "import", "path" -> log) // runs 4 and 5
+    reply(s, "import", "path" -> log)
+    val uuid = g.store.invocations.filter(org.apache.spark.sql.functions.col("run_serial") === 4L)
+      .select("id").head().getString(0)
+    // the route through blq_runs: resolve, then look the serial up again
+    def viaRollup(ref: String): Option[String] =
+      g.run(ref).select("run_serial").collect().headOption.map(r =>
+        graft.api.Formatters.json(g.analytics.eventsForRun(r.getLong(0)), 100))
+    for (ref <- Seq("~1", "~2", "2", "build:2", uuid)) {
+      val expected = viaRollup(ref)
+      assert(expected.exists(_ != "[]"), s"$ref must name a run with events")
+      assert(s.call("events", Map("ref" -> ref)) === expected.get, ref)
+    }
+    for (ref <- Seq("99", "nope:7"))
+      assert(s.call("events", Map("ref" -> ref)) ===
+        s"""{"error":"no run matches ref '$ref'"}""")
+    assert(reply(s, "event", "ref" -> "build:2:0").contains("expected ';'"))
+    assert(s.call("event", Map("ref" -> "99:0")) === """{"error":"no run matches ref '99:0'"}""")
+  }
+
   test("snapshot: a foreign writer and an external delete reach the next call; concurrent reads never throw") {
     val (g, a, log) = fixtureServe("serve_foreign")
     def history = reply(a, "history", "limit" -> "10")
@@ -746,7 +769,7 @@ class ServeSpec extends SparkSpec {
     val b = new EventStore(spark, g.root)
     b.commitRun(Fixtures.inv("i4", b.nextRunSerial(), Some("build"),
         "2026-08-02 13:00:00", Some(1), date = Fixtures.d2),
-      Some(spark.createDataFrame(Seq(Fixtures.ev("e6", "i4", 0, "error",
+      EventStore.EventFrame(spark.createDataFrame(Seq(Fixtures.ev("e6", "i4", 0, "error",
         "foreign boom", date = Fixtures.d2)))))
     org.apache.commons.io.FileUtils.deleteDirectory(
       new java.io.File(s"${g.root}/events/date=2026-08-01"))

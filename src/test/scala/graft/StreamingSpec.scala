@@ -3,6 +3,7 @@ package graft
 import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
+import graft.store.EventStore
 import graft.streaming.LiveStreams
 import graft.streaming.LiveStreams.{AttemptStatus, LifecycleEvent}
 
@@ -110,7 +111,7 @@ class StreamingSpec extends SparkSpec {
     val store = new graft.store.EventStore(spark,
       java.nio.file.Files.createTempDirectory("stream_store").toString)
     store.commitRun(inv("i1", 1L, Some("b"), "2026-08-01 10:00:00", Some(1)),
-      Some(spark.createDataFrame(Seq(ev("e1", "i1", 0, "error", "first batch")))))
+      EventStore.EventFrame(spark.createDataFrame(Seq(ev("e1", "i1", 0, "error", "first batch")))))
     val query = store.eventsStream
       .writeStream.format("memory").queryName("events_stream_t")
       .outputMode(OutputMode.Append()).start()
@@ -119,7 +120,7 @@ class StreamingSpec extends SparkSpec {
       assert(spark.table("events_stream_t").count() === 1)
       // a new run appended AFTER the stream started appears incrementally
       store.commitRun(inv("i2", 2L, Some("b"), "2026-08-01 11:00:00", Some(0)),
-        Some(spark.createDataFrame(Seq(
+        EventStore.EventFrame(spark.createDataFrame(Seq(
           ev("e2", "i2", 0, "warning", "second batch"),
           ev("e3", "i2", 1, "info", "third")))))
       query.processAllAvailable()
@@ -132,7 +133,7 @@ class StreamingSpec extends SparkSpec {
     val store = new graft.store.EventStore(spark,
       java.nio.file.Files.createTempDirectory("alert_store").toString)
     store.commitRun(inv("i1", 1L, Some("b"), "2026-08-01 10:00:00", Some(1)),
-      Some(spark.createDataFrame(Seq(ev("e1", "i1", 0, "error", "boom"),
+      EventStore.EventFrame(spark.createDataFrame(Seq(ev("e1", "i1", 0, "error", "boom"),
         ev("e2", "i1", 1, "error", "boom2"),
         ev("e3", "i1", 2, "warning", "warn")))))
     val counts = LiveStreams.severityCounts(
@@ -152,7 +153,7 @@ class StreamingSpec extends SparkSpec {
     val store = new graft.store.EventStore(spark,
       java.nio.file.Files.createTempDirectory("storm_store").toString)
     store.commitRun(inv("i1", 1L, Some("b"), "2026-08-01 10:00:00", Some(1)),
-      Some(spark.createDataFrame(Seq(
+      EventStore.EventFrame(spark.createDataFrame(Seq(
         ev("e1", "i1", 0, "error", "boom", fp = Some("fp_hot")),
         ev("e2", "i1", 1, "error", "boom again", fp = Some("fp_hot")),
         ev("e3", "i1", 2, "error", "boom third", fp = Some("fp_hot")),
